@@ -253,37 +253,6 @@ def search_fielded(
     return [(int(docs[i]), float(scores[i])) for i in order_k]
 
 
-def _raw_postings(fs: LocalSearcher, term: str):
-    """Merged doc-sorted (docs, tfs, doclens) for one term in one
-    field index — RAW values (BM25F saturates a combined pseudo-tf,
-    so the cached per-field idf*tfnorm contributions don't apply).
-    Tombstone-masked like every serving decode."""
-    from search_engine_spark.functions.codec import (
-        decode_postings,
-        decode_varints,
-    )
-    from search_engine_spark.plans.deletes import mask_deleted
-
-    segs = fs._segments(term)
-    d_parts, t_parts, l_parts = [], [], []
-    for row in segs.itertuples(index=False):
-        cand, ctf = decode_postings(row.doc_ids, row.tfs)
-        cdl = decode_varints(row.doclens).astype(np.int64)
-        cand, ctf, cdl = mask_deleted(fs._deleted, cand, ctf, cdl)
-        if cand.size:
-            d_parts.append(cand)
-            t_parts.append(ctf)
-            l_parts.append(cdl)
-    if not d_parts:
-        z = np.empty(0, np.int64)
-        return z, z, z
-    d = np.concatenate(d_parts)
-    t = np.concatenate(t_parts)
-    l = np.concatenate(l_parts)
-    order = np.argsort(d, kind="stable")
-    return d[order], t[order].astype(np.int64), l[order]
-
-
 def search_bm25f(
     index_dir: str,
     qtext_or_terms,
@@ -347,7 +316,7 @@ def search_bm25f(
     for t in dict.fromkeys(exclude or []):
         for fs, _w in legs:
             if t in fs._df:
-                excl_parts.append(_raw_postings(fs, t)[0])
+                excl_parts.append(fs._decode(fs._segments(t))[0])
     excl = (np.unique(np.concatenate(excl_parts))
             if excl_parts else None)
 
@@ -360,7 +329,7 @@ def search_bm25f(
         for fs, w in legs:
             if t not in fs._df:
                 continue
-            d, tf, dl = _raw_postings(fs, t)
+            d, tf, dl = fs._decode(fs._segments(t))
             if d.size == 0:
                 continue
             bf = (1.0 - B) + B * dl.astype(np.float64) / fs.avgdl

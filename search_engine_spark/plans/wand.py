@@ -1,5 +1,5 @@
-"""Local low-latency query path: block-max pruned top-k over the
-compressed index (SURVEY.md section 3.2, M4).
+"""Local low-latency query path: ranked top-k over the compressed
+index in-process (SURVEY.md section 3.2, M4).
 
 This path crosses NO process boundary — a thin pyarrow reader opens
 only the parquet row groups of the query's (bucket, term) keys and
@@ -8,26 +8,41 @@ feasible; a Spark job pays a ~100ms+ scheduling floor (the distributed
 IndexReader path remains the correctness/batch path and must return
 identical results — property-tested).
 
-Algorithm (block-max WAND adapted to conjunctive evaluation — the
-reference intersects posting lists, so candidates must contain ALL
-terms):
+Every query shape is one _Spec run by one of two executors:
 
-1. dictionary lookup -> df, bucket per term; any missing term -> [].
-2. pick the rarest term r (shortest list — classic intersect order).
-3. process r's segments in DESCENDING score-bound order; maintain a
-   top-k heap with threshold theta. For each segment s:
-       UB(s) = idf_r * max_tfnorm(s) + sum_{t != r} idf_t * maxbound_t
-   if the heap is full and UB(s) <= theta, the segment cannot contribute
-   — skipped without decoding (block-max prune).
-4. surviving segments are decoded; candidates intersected against the
-   other terms' lists (decoded lazily, once, with per-term doc-range
-   segment skipping vs the rarest list's span); exact BM25 on the
-   intersection; heap updated.
+* the spec: the fixed term order (the per-doc float addition order),
+  how many leading terms drive candidate generation, the match
+  predicate (every group hit — AND is one group per term, OR one group
+  of all terms — plus msm), per-term weights, and the contribution
+  source (BM25 idf*tfnorm, or LM-Dirichlet with mu and p_t). AND puts
+  the rarest term first, then query order; OR sorts by (df, term);
+  grouped puts the lightest group by (df, term), then the rest by
+  (df, term); LMD keeps query order.
+* _blockmax: the driving terms' segments are visited in descending
+  upper-bound order — own bound, plus every other term's best
+  overlapping-segment bound (_overlap_bound), plus the max static
+  boost. A top-k heap holds theta; once a bound is strictly below
+  theta every remaining segment is skipped without decoding. A doc is
+  generated only by its first containing driving term; the other
+  terms are probed at the segment's candidates. Non-driving terms
+  decode only the segments overlapping the driving terms' doc span.
+* _scatter: a candidate array — the union of the driving lists, or a
+  caller's fixed array — is probed against every term's full cached
+  list.
 
-Exactness: the prune only discards segments whose best possible score
-cannot beat the current k-th score; tie-safety uses strict '<' so
-equal-score docs are never lost. pruned == unpruned is property-tested
-on randomized corpora/queries (tests/test_wand.py).
+Routing: BM25 takes the scatter when prune=False, or when fast and
+every term is warm in the decoded cache; every other BM25 query takes
+block-max. LMD takes the scatter for multi-term or warm queries and
+block-max for a single cold term.
+
+Exactness: a pruned segment's bound cannot beat the k-th score, and
+strict '<' keeps equal-score smaller-doc_id tie winners. Exclusion,
+restrict, msm and the after cursor only remove candidates, so every
+bound stays valid. Both executors add contributions in spec order from
+the same arrays; a term a doc lacks adds 0.0 and a unit weight
+multiplies by 1.0, and x + 0.0 == x and x * 1.0 == x, so block-max,
+scatter and warm results are bit-identical (property-tested in
+tests/test_wand.py, test_grouped.py, test_boosts.py, test_lmd.py).
 """
 
 from __future__ import annotations
@@ -36,6 +51,7 @@ import heapq
 import math
 import os
 import time
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -49,8 +65,20 @@ from search_engine_spark.plans.scoring import analyze_query
 
 
 class _LmdNoBounds(Exception):
-    """Pruned LMD preconditions unmet (missing docs footer stats or a
-    pre-cf dictionary) — route the exhaustive fallback."""
+    """Pruned LMD preconditions unmet (missing docs footer stats) —
+    route the exhaustive fallback."""
+
+
+class _Spec(NamedTuple):
+    """One query shape for the executors (see module docstring)."""
+
+    terms: list[str]       # fixed per-doc addition order
+    n_drive: int           # terms[:n_drive] generate candidates
+    groups: list[tuple]    # term-index groups; a match hits every one
+    msm: int               # ... and at least msm terms overall
+    w: list[float]         # per-term weights
+    par: list[float]       # per-term idf (BM25) or p_t (LMD)
+    mu: float | None = None  # LMD smoothing; None means BM25
 
 
 def _overlap_bound(of: np.ndarray, ol: np.ndarray, ob: np.ndarray,
@@ -244,7 +272,6 @@ class LocalSearcher:
                 hi = stats.max if stats is not None else None
                 self._rg.setdefault(bucket, []).append((path, rg, lo, hi))
         self._term_cache: dict[str, pd.DataFrame] = {}
-        self._fast = True
         # per-term query counts: a term is promoted to the full-list
         # cache (enabling the vectorized warm path) on its SECOND
         # encounter — first-contact queries keep block-max pruning's
@@ -479,31 +506,21 @@ class LocalSearcher:
             score = Σ_matched [ln(1 + tf/(μ·p_t)) + ln(μ/(μ+dl))]
             p_t   = cf_t / total_tokens
 
-        Serving routes a BLOCK-MAX PRUNED path (round 5): the stored
-        per-segment impact is BM25's max_tfnorm — a different
-        similarity — but it is INVERTIBLE into an LMD-valid bound:
-        tfnorm = u(k1+1)/(u+k1) is monotone in the length-normalized
-        tf u = tf/(1-b+b·dl/avgdl), so max_tfnorm = M gives every doc
-        in the segment u <= k1·M/(k1+1-M) and hence
-        tf <= min(U·(1-b+b·dl_max/avgdl), dl_max) with dl_max from the
-        docs table's parquet footer stats. Segment bound =
-        ln(1+tf_ub/(μ·p_t)) + ln(μ/(μ+dl_min)) — one derived impact,
-        no rebuild, pruning exact (strict '<', same argument as BM25).
-        Scores are accumulated per candidate in ORIGINAL query-term
-        order, bit-identical to the exhaustive reduction.
+        Static boosts never apply to LMD scores.
 
-        The exhaustive path remains the fallback wherever the
-        dictionary cf may not equal the decoded masked cf (live
-        tombstones without a federated cf override, pre-meta eager
-        indexes) — there p_t must come from the decoded postings and
-        no pre-decode bound exists. cf_t otherwise comes from the
-        dictionary (bit-equal to the decoded sum on a tombstone-free
+        Block-max needs per-segment LMD bounds, derived from the baked
+        BM25 max_tfnorm impacts (_lmd_seg_bounds), and p_t from the
+        dictionary cf (bit-equal to the decoded sum on a tombstone-free
         index; fsck invariant) or the federated _lmd_cf override.
+        Wherever the dictionary cf may differ from the decoded masked
+        cf (live tombstones without an override, pre-meta or pre-cf
+        dictionaries, missing docs footer stats), p_t comes from the
+        decoded postings and the scatter runs over them.
 
         exclude / restrict carry the standard NOT-term and
         filter-clause semantics (removal-only, applied before
-        top-k). mode='and' keeps docs matching every present query
-        term; absent terms make AND unsatisfiable (BM25 `search`
+        top-k). mode='and' keeps docs matching every query term;
+        absent terms make AND unsatisfiable (BM25 `search`
         convention), OR drops them."""
         if mode not in ("and", "or"):
             raise ValueError(f"mode must be 'and' or 'or', got {mode!r}")
@@ -523,81 +540,48 @@ class LocalSearcher:
             return []
         excl = self._excluded_docs(exclude) if exclude else None
 
-        mu = float(mu)
-        prunable = (not self._eager) and (
-            self._lmd_cf is not None or self._deleted.size == 0
-        )
-        if prunable:
-            try:
-                return self._search_lmd_pruned(
-                    qterms, k=k, mode=mode, mu=mu, excl=excl, allow=allow
-                )
-            except _LmdNoBounds:  # docs footer stats missing
-                pass
+        n = len(qterms)
+        q = _Spec(qterms, 1 if mode == "and" else n,
+                  [(j,) for j in range(n)] if mode == "and"
+                  else [tuple(range(n))], 1, [1.0] * n, [], float(mu))
         total = float(self.sum_doclen)
-        doc_parts, contrib_parts = [], []
-        for t in qterms:
-            segs = self._segments(t)
-            t_docs, t_tfs, t_dls = [], [], []
-            for row in segs.itertuples(index=False):
-                cand, ctf = decode_postings(row.doc_ids, row.tfs)
-                cdl = decode_varints(row.doclens).astype(np.int64)
-                cand, ctf, cdl = mask_deleted(self._deleted, cand, ctf, cdl)
-                if cand.size:
-                    t_docs.append(cand)
-                    t_tfs.append(ctf)
-                    t_dls.append(cdl)
-            if not t_docs:
-                if mode == "and":
-                    return []
-                continue
-            docs = np.concatenate(t_docs)
-            tfs = np.concatenate(t_tfs).astype(np.float64)
-            dls = np.concatenate(t_dls).astype(np.float64)
-            # cf is a sum of per-doc tfs — an exact integer < 2^53,
-            # so float64 addition is order-independent and the
-            # federated override (sum of per-sub term_cf) is
-            # bit-equal to the merged index's own tfs.sum()
-            cf = (float(self._lmd_cf[t]) if self._lmd_cf is not None
-                  else tfs.sum())
-            p_t = cf / total
-            doc_parts.append(docs)
-            contrib_parts.append(
-                np.log1p(tfs / (mu * p_t)) + np.log(mu / (mu + dls))
-            )
-        if not doc_parts:
-            return []
-        n_present = len(doc_parts)
-        all_docs = np.concatenate(doc_parts)
-        all_contrib = np.concatenate(contrib_parts)
-        u_docs, inv = np.unique(all_docs, return_inverse=True)
-        scores = np.zeros(u_docs.size, dtype=np.float64)
-        np.add.at(scores, inv, all_contrib)
-        counts = np.bincount(inv, minlength=u_docs.size)
-        m = self._eligible(u_docs, excl, allow)
-        if mode == "and":
-            m &= counts == n_present
-        u_docs, scores = u_docs[m], scores[m]
-        if not u_docs.size:
-            return []
-        order = np.lexsort((u_docs, -scores))[:k]
-        return [(int(u_docs[i]), float(scores[i])) for i in order]
+        if not self._eager and (
+            self._lmd_cf is not None or self._deleted.size == 0
+        ):
+            cfs = [self._lmd_cf[t] if self._lmd_cf is not None
+                   else self._dict_cf(t) for t in qterms]
+            if all(cf is not None and cf > 0 for cf in cfs):
+                q = q._replace(par=[float(cf) / total for cf in cfs])
+                cold = (n == 1 and (qterms[0], q.mu) not in self._lmd_cache
+                        and excl is None and allow is None)
+                try:
+                    return self._run(q, not cold, k, excl, allow)
+                except _LmdNoBounds:  # docs footer stats missing
+                    pass
+        # cf is a sum of per-doc tfs — an exact integer < 2^53, so the
+        # decoded sum is order-independent and the federated override
+        # (sum of per-sub term_cf) is bit-equal to the merged index's
+        raw = [self._decode(self._segments(t)) for t in qterms]
+        q = q._replace(par=[
+            (float(self._lmd_cf[t]) if self._lmd_cf is not None
+             else float(tf.sum())) / total
+            for t, (_, tf, _) in zip(qterms, raw)
+        ])
+        lists = [(d, self._contrib(q, j, tf, dl))
+                 for j, (d, tf, dl) in enumerate(raw)]
+        return self._vector_topk(
+            *self._scatter(q, excl, allow, lists=lists), k
+        )
 
     def term_cf(self, term: str) -> int:
         """Tombstone-masked collection frequency of `term` in THIS
         index — the exact integer search_lmd's decoded ``tfs.sum()``
-        produces for it (per-doc tfs sum to < 2^53, so float64
-        addition is exact in any order). plans/federate sums this
-        across sub-indexes to assemble the GLOBAL cf that makes
-        federated LM-Dirichlet bit-identical to the merged index."""
+        produces for it. plans/federate sums this across sub-indexes
+        to assemble the GLOBAL cf that makes federated LM-Dirichlet
+        bit-identical to the merged index."""
         if self._dict_lookup(term) is None:
             return 0
-        total = 0
-        for row in self._segments(term).itertuples(index=False):
-            cand, ctf = decode_postings(row.doc_ids, row.tfs)
-            cand, ctf = mask_deleted(self._deleted, cand, ctf)
-            total += int(ctf.sum())
-        return total
+        return int(self._decode(self._segments(term))[1].sum())
 
     def _dict_cf(self, term: str) -> int | None:
         """Exact collection frequency from the dictionary (row-group
@@ -672,151 +656,6 @@ class LocalSearcher:
             np.log1p(tf_ub / (mu * p_t)) + math.log(mu / (mu + dl_min))
         )
 
-    def _lmd_full(self, term: str, mu: float, p_t: float):
-        """Merged sorted (doc_ids, LMD contributions) over all of
-        `term`'s segments, cached per (term, mu) — the LMD analogue of
-        _load_full. Contributions bake p_t in; p_t is a corpus
-        constant per term (dictionary cf or federated override), so
-        the cache is query-independent."""
-        key = (term, mu)
-        hit = self._lru_hit(self._lmd_cache, key)
-        if hit is not None:
-            return hit
-        segs = self._segments(term)
-        d_parts, c_parts = [], []
-        for row in segs.itertuples(index=False):
-            cand, ctf = decode_postings(row.doc_ids, row.tfs)
-            cdl = decode_varints(row.doclens).astype(np.int64)
-            cand, ctf, cdl = mask_deleted(self._deleted, cand, ctf, cdl)
-            if cand.size:
-                d_parts.append(cand)
-                c_parts.append(
-                    np.log1p(ctf.astype(np.float64) / (mu * p_t))
-                    + np.log(mu / (mu + cdl.astype(np.float64)))
-                )
-        if not d_parts:
-            out = (np.empty(0, np.int64), np.empty(0, np.float64))
-        else:
-            d = np.concatenate(d_parts)
-            c = np.concatenate(c_parts)
-            order = np.argsort(d, kind="stable")
-            out = (d[order], c[order])
-        if len(self._lmd_cache) >= self._cache_terms:
-            self._lmd_cache.pop(next(iter(self._lmd_cache)))
-        self._lmd_cache[key] = out
-        return out
-
-    def _lmd_scatter(self, qterms, full, k, mode, excl, allow):
-        """Vectorized union scatter over cached per-term contribution
-        lists — the LMD serving hot path (the exhaustive reduction
-        minus the decode). Accumulation runs in ORIGINAL query-term
-        order, so scores are bit-identical to the exhaustive path
-        (x+0.0 is a no-op for finite x)."""
-        parts = [full[t] for t in qterms if full[t][0].size]
-        if not parts:
-            return []
-        n_present = len(parts)
-        union = np.unique(np.concatenate([p[0] for p in parts]))
-        scores = np.zeros(union.size, dtype=np.float64)
-        counts = np.zeros(union.size, dtype=np.int32)
-        for od, oc in parts:  # qterms order preserved by construction
-            pos = np.searchsorted(union, od)
-            pos_c = np.minimum(pos, union.size - 1)
-            hit = union[pos_c] == od
-            # od strictly increasing per term -> unique hit indices
-            scores[pos_c[hit]] += oc[hit]
-            counts[pos_c[hit]] += 1
-        m = self._eligible(union, excl, allow)
-        if mode == "and":
-            m &= counts == n_present
-        union, scores = union[m], scores[m]
-        self.last_segments_skipped = 0
-        if not union.size:
-            return []
-        order = np.lexsort((union, -scores))[:k]
-        return [(int(union[i]), float(scores[i])) for i in order]
-
-    def _search_lmd_pruned(self, qterms: list[str], *, k: int,
-                           mode: str, mu: float, excl, allow):
-        """LM-Dirichlet serving with derived impacts (see search_lmd).
-
-        Two regimes, chosen by what decode work is avoidable:
-
-        * multi-term queries (and any warm query): every matched
-          term's contribution list is needed in full, so the plan is
-          decode-once-into-the-(term,mu)-cache + vectorized scatter —
-          the same reduction the exhaustive path runs, minus repeated
-          decode. Warm p50 is the scatter cost alone.
-        * single-term COLD queries: the classic impact-ordered top-k.
-          Segments are visited in descending derived-LMD-bound order
-          (BM25 max_tfnorm inverted into a valid LMD bound,
-          _lmd_seg_bounds) and a segment whose bound cannot beat the
-          k-th heap score is SKIPPED WITHOUT DECODING — the Zipf-head
-          term's long tail of low-tf segments never leaves parquet.
-
-        Both regimes return results bit-identical to the exhaustive
-        reduction (accumulation order preserved; tie-break strict)."""
-        total = float(self.sum_doclen)
-        p_t: dict[str, float] = {}
-        for t in qterms:
-            cf = (self._lmd_cf[t] if self._lmd_cf is not None
-                  else self._dict_cf(t))
-            if cf is None or cf <= 0:
-                raise _LmdNoBounds()  # pre-cf dictionary -> exhaustive
-        # recompute AFTER the presence loop so a raise above leaves no
-        # partial state; cf values are re-read from the LRU caches
-        for t in qterms:
-            cf = (self._lmd_cf[t] if self._lmd_cf is not None
-                  else self._dict_cf(t))
-            p_t[t] = float(cf) / total
-
-        single_cold = (
-            len(qterms) == 1
-            and (qterms[0], mu) not in self._lmd_cache
-            and excl is None and allow is None
-        )
-        if not single_cold:
-            full = {t: self._lmd_full(t, mu, p_t[t]) for t in qterms}
-            return self._lmd_scatter(qterms, full, k, mode, excl, allow)
-
-        # impact-ordered single-term top-k: bound-sorted segment scan
-        t = qterms[0]
-        segs = self._segments(t)
-        if len(segs) == 0:
-            return []
-        bounds = self._lmd_seg_bounds(
-            segs.max_tfnorm.to_numpy(), p_t[t], mu
-        )
-        order = np.argsort(-bounds, kind="stable")
-        rows = list(segs.itertuples(index=False))
-        heap: list[tuple[float, int]] = []
-        skipped = 0
-        for n_done, r in enumerate(order):
-            ub = float(bounds[r])
-            if len(heap) == k and ub < heap[0][0]:  # strict: tie-safe
-                skipped += order.size - n_done
-                break
-            row = rows[r]
-            cand, ctf = decode_postings(row.doc_ids, row.tfs)
-            cdl = decode_varints(row.doclens).astype(np.int64)
-            cand, ctf, cdl = mask_deleted(self._deleted, cand, ctf, cdl)
-            if not cand.size:
-                continue
-            sc = (np.log1p(ctf.astype(np.float64) / (mu * p_t[t]))
-                  + np.log(mu / (mu + cdl.astype(np.float64))))
-            if cand.size > k:
-                order_k = np.lexsort((cand, -sc))[:k]
-                cand, sc = cand[order_k], sc[order_k]
-            for doc, s in zip(cand, sc):
-                item = (float(s), -int(doc))
-                if len(heap) < k:
-                    heapq.heappush(heap, item)
-                elif item > heap[0]:
-                    heapq.heapreplace(heap, item)
-        self.last_segments_skipped = skipped
-        out = sorted(heap, key=lambda it: (-it[0], -it[1]))
-        return [(-nd, s) for s, nd in out]
-
     def search_grouped(
         self, qtext_or_groups, *, k: int = 10, stem: bool = True,
         exclude=None, after: tuple[int, float] | None = None,
@@ -829,24 +668,12 @@ class LocalSearcher:
         over ALL distinct matched query terms of
         boost * idf * tfnorm, NOT-terms suppressed.
 
-        Evaluation is GROUP-LEVEL BLOCK-MAX pruning: only the
-        lightest group's segments generate candidates (every result
-        matches every group, so they are an exact superset), each
-        segment bounded by its own boosted max contribution plus every
-        other query term's best overlapping-segment bound — a
-        stopword-laden OR-group therefore contributes bounds and
-        membership masks, never a candidate scatter over its own df,
-        and segments whose bound cannot beat the current k-th score
-        are skipped exactly (same argument as _search_or: any doc in a
-        pruned segment scores <= the bound). Warm repeats promote
-        terms into the decoded cache, which makes the per-segment
-        contribution lookups allocation-free; prune=False routes the
-        exhaustive vectorized scatter-add reference path. The two
-        paths are bit-identical because additions happen in the same
-        fixed term order (driving group's terms by (df, term), then
-        the rest — a doc's first containing driving term always adds
-        first, and x + 0.0 == x keeps non-containing terms inert).
-        Supports the same `after` pagination cursor as search()."""
+        Only the lightest group's terms drive candidates (every result
+        matches every group, so they are an exact superset); a
+        stopword-laden OR-group contributes bounds and membership
+        masks, never a candidate scatter over its own df. prune / fast
+        route as in search(), and the same `after` pagination cursor
+        is supported."""
         from search_engine_spark.plans.scoring import parse_grouped_query
 
         if isinstance(qtext_or_groups, str):
@@ -859,7 +686,6 @@ class LocalSearcher:
                 boosts = parsed_boosts
         else:
             groups = [list(dict.fromkeys(g)) for g in qtext_or_groups]
-        boosts = boosts or {}
         if isinstance(exclude, str):
             exclude = analyze_query(exclude, stem=stem)
         if after is not None:
@@ -867,51 +693,27 @@ class LocalSearcher:
         groups = [[t for t in g if t in self._df] for g in groups]
         if not groups or any(not g for g in groups):
             return []  # empty query, or an unsatisfiable group
-        # fixed global term order (see docstring): lightest group's
-        # terms by (df, term) first, remaining terms after
-        base = min(groups, key=lambda g: sum(self._df[t] for t in g))
-        base_terms = sorted(dict.fromkeys(base),
-                            key=lambda t: (self._df[t], t))
-        base_set = set(base_terms)
-        rest = sorted({t for g in groups for t in g} - base_set,
-                      key=lambda t: (self._df[t], t))
-        terms = base_terms + rest
-        other_groups = [g for g in groups if g is not base]
-        idf = {t: self._idf(t) for t in terms}
-        w = {t: float(boosts.get(t, 1.0)) for t in terms}
+        q = self._grouped_spec(groups, boosts or {})
         excl = self._excluded_docs(exclude) if exclude else None
         excl = self._merge_excl(excl, exclude_docs)
         allow = self._norm_restrict(restrict)
         if allow is not None and allow.size == 0:
             return []
-
-        if not prune:
-            # exhaustive reference path for the equivalence properties
-            return self._grouped_vec(
-                terms, base_terms, other_groups, idf, w, k, excl, after,
-                allow,
-            )
-        if fast:
-            # repeats warm the decoded cache so the block-max path's
-            # contribution lookups skip the varint decode entirely
-            self._promote_repeats(terms, idf)
-        return self._grouped_blockmax(
-            terms, base_terms, other_groups, idf, w, k, excl, after, allow
-        )
+        if prune and fast:
+            self._promote_repeats(q.terms, dict(zip(q.terms, q.par)))
+        return self._run(q, not prune or (fast and self._warm(q.terms)),
+                         k, excl, allow, after)
 
     def score_grouped_candidates(self, groups, cand: np.ndarray, *,
                                  boosts=None, exclude=None,
                                  exclude_docs=None):
         """Grouped-boolean scores for a FIXED candidate array — the
         restrict-driven evaluation plans/phraseq uses when a phrase
-        clause has already pinned the candidate set: instead of
-        scattering every query term's full posting list over its own
-        union (cost ~ posting mass), each term is probed AT the
-        candidates (|cand| searchsorteds into the cached list — cost
-        ~ |cand|·log per term, independent of the Zipf head's list
-        length). Scores are bit-identical to search_grouped's for the
-        surviving docs: same fixed term order, same contribution
-        arrays, same static-boost application.
+        clause has already pinned the candidate set: each term is
+        probed AT the candidates (cost ~ |cand|·log per term,
+        independent of the Zipf head's list length), with
+        search_grouped's spec, so surviving docs' scores are
+        bit-identical to its.
 
         Returns (docs, scores) for the candidates that satisfy the
         boolean semantics (>= 1 term of EVERY group, no NOT matches),
@@ -920,167 +722,27 @@ class LocalSearcher:
                   for g in groups]
         if not groups or any(not g for g in groups) or cand.size == 0:
             return np.empty(0, np.int64), np.empty(0, np.float64)
-        boosts = boosts or {}
         if isinstance(exclude, str):
             exclude = analyze_query(exclude)
-        base = min(groups, key=lambda g: sum(self._df[t] for t in g))
-        base_terms = sorted(dict.fromkeys(base),
-                            key=lambda t: (self._df[t], t))
-        rest = sorted({t for g in groups for t in g} - set(base_terms),
-                      key=lambda t: (self._df[t], t))
-        terms = base_terms + rest
-        other_groups = [g for g in groups if g is not base]
+        q = self._grouped_spec(groups, boosts or {})
         excl = self._excluded_docs(exclude) if exclude else None
         excl = self._merge_excl(excl, exclude_docs)
-        alive = ~self._in_sorted(excl, cand) if excl is not None \
-            else np.ones(cand.size, dtype=bool)
-        scores = np.zeros(cand.size, dtype=np.float64)
-        hits = {}
-        for t in terms:
-            od, oc = self._load_full(t, self._idf(t))
-            if od.size == 0:
-                hits[t] = np.zeros(cand.size, dtype=bool)
-                continue
-            pos = np.searchsorted(od, cand)
-            pos_c = np.minimum(pos, od.size - 1)
-            hit = od[pos_c] == cand
-            hits[t] = hit
-            wt = float(boosts.get(t, 1.0))
-            # x * 1.0 is bit-exact (matches _grouped_vec)
-            scores = scores + np.where(hit, oc[pos_c] * wt, 0.0)
-        base_mask = np.zeros(cand.size, dtype=bool)
-        for t in base_terms:
-            base_mask |= hits[t]
-        alive &= base_mask
-        for g in other_groups:
-            g_mask = np.zeros(cand.size, dtype=bool)
-            for t in g:
-                g_mask |= hits[t]
-            alive &= g_mask
-        ca = cand[alive]
-        return ca, self._boosted(ca, scores[alive])
+        return self._scatter(q, excl, cand=cand)
 
-    def _grouped_vec(self, terms, base_terms, other_groups, idf, w, k,
-                     excl=None, after=None, allow=None):
-        """Vectorized grouped evaluation: scatter-add every term's
-        cached full list over the driving group's union, mask group
-        membership, top-k. Exact; cost is the query's posting mass."""
-        lists = {t: self._load_full(t, idf[t]) for t in terms}
-        union = np.unique(np.concatenate([lists[t][0] for t in base_terms]))
-        if union.size == 0:
-            return []
-        alive = np.ones(union.size, dtype=bool)
-        if excl is not None or allow is not None:
-            alive &= self._eligible(union, excl, allow)
-        hits = {t: self._in_sorted(lists[t][0], union) for t in terms}
-        for g in other_groups:
-            g_mask = np.zeros(union.size, dtype=bool)
-            for t in g:
-                g_mask |= hits[t]
-            alive &= g_mask
-        scores = np.zeros(union.size, dtype=np.float64)
-        for t in terms:
-            od, oc = lists[t]
-            pos = np.searchsorted(union, od)
-            pos_c = np.minimum(pos, union.size - 1)
-            hit = union[pos_c] == od
-            # x * 1.0 is bit-exact, so unboosted queries are unchanged
-            scores[pos_c[hit]] += oc[hit] * w[t]
-        self.last_segments_skipped = 0
-        ca, sa = union[alive], scores[alive]
-        return self._vector_topk(ca, self._boosted(ca, sa), k, after)
-
-    def _grouped_blockmax(self, terms, base_terms, other_groups, idf, w,
-                          k, excl=None, after=None, allow=None):
-        """Cold grouped evaluation: the driving group's segments are
-        the only candidate generators (dedup: a doc is generated by
-        its FIRST containing driving term), bounded by boosted
-        overlap-aware upper bounds over ALL query terms; descending-
-        bound order + strict '<' skip is exact, as in _search_or."""
-        n_base = len(base_terms)
-        per_term = [(t, self._segments(t)) for t in base_terms]
-        all_segs = {t: self._segments(t) for t in terms}
-
-        entries = []  # (ub, base_idx, row)
-        for i, (t, segs) in enumerate(per_term):
-            if len(segs) == 0:
-                continue
-            s_first = segs.first_doc.to_numpy()
-            s_last = segs.last_doc.to_numpy()
-            ub = (w[t] * idf[t]
-                  * segs.max_tfnorm.to_numpy().astype(np.float64))
-            for u in terms:
-                osegs = all_segs[u]
-                if u == t or len(osegs) == 0:
-                    continue
-                ub = ub + w[u] * idf[u] * _overlap_bound(
-                    osegs.first_doc.to_numpy(), osegs.last_doc.to_numpy(),
-                    osegs.max_tfnorm.to_numpy(), s_first, s_last,
-                )
-            for r, row in enumerate(segs.itertuples(index=False)):
-                # +bmax keeps the bound valid over boosted final scores
-                entries.append((float(ub[r]) + self._bmax, i, row))
-        entries.sort(key=lambda e: -e[0])
-
-        heap: list[tuple[float, int]] = []
-        a_item = (after[1], -int(after[0])) if after is not None else None
-
-        def offer(doc: int, score: float) -> None:
-            item = (score, -doc)
-            if a_item is not None and item >= a_item:
-                return
-            if len(heap) < k:
-                heapq.heappush(heap, item)
-            elif item > heap[0]:
-                heapq.heapreplace(heap, item)
-
-        skipped = 0
-        for n_done, (ub, i, row) in enumerate(entries):
-            # strict '<' keeps equal-score smaller-doc_id tie winners
-            if len(heap) == k and ub < heap[0][0]:
-                skipped += len(entries) - n_done
-                break
-            t = base_terms[i]
-            cand, c_contrib = self._seg_decode(t, row, idf[t])
-            scores = c_contrib * w[t]
-            keep = self._eligible(cand, excl, allow)
-            hits = {}
-            for j, u in enumerate(terms):
-                if u == t:
-                    continue
-                od, oc = self._load_full(u, idf[u])
-                if od.size == 0:
-                    hits[u] = np.zeros(cand.size, dtype=bool)
-                    continue
-                pos = np.searchsorted(od, cand)
-                pos_c = np.clip(pos, 0, od.size - 1)
-                hit = od[pos_c] == cand
-                if j < i and j < n_base:
-                    keep &= ~hit  # doc driven by its first base term only
-                scores = scores + np.where(hit, oc[pos_c] * w[u], 0.0)
-                hits[u] = hit
-            alive = keep
-            for g in other_groups:
-                g_mask = np.zeros(cand.size, dtype=bool)
-                for u in g:
-                    if u == t:
-                        g_mask |= True  # every cand contains t
-                    else:
-                        g_mask = g_mask | hits[u]
-                alive = alive & g_mask
-            ca, sa = cand[alive], scores[alive]
-            sa = self._boosted(ca, sa)
-            if after is not None and ca.size:
-                keep_a = self._after_mask(ca, sa, after)
-                ca, sa = ca[keep_a], sa[keep_a]
-            if ca.size > k:
-                order_k = np.lexsort((ca, -sa))[:k]
-                ca, sa = ca[order_k], sa[order_k]
-            for doc, sc in zip(ca, sa):
-                offer(int(doc), float(sc))
-        self.last_segments_skipped = skipped
-        out = sorted(heap, key=lambda it: (-it[0], -it[1]))
-        return [(-nd, s) for s, nd in out]
+    def _grouped_spec(self, groups, boosts) -> _Spec:
+        """The lightest group drives; terms are its terms by
+        (df, term), then the rest by (df, term)."""
+        base = min(groups, key=lambda g: sum(self._df[t] for t in g))
+        terms = sorted(dict.fromkeys(base), key=lambda t: (self._df[t], t))
+        n_base = len(terms)
+        terms += sorted({t for g in groups for t in g} - set(terms),
+                        key=lambda t: (self._df[t], t))
+        ix = {t: j for j, t in enumerate(terms)}
+        return _Spec(
+            terms, n_base, [tuple(sorted({ix[t] for t in g})) for g in groups],
+            1, [float(boosts.get(t, 1.0)) for t in terms],
+            [self._idf(t) for t in terms],
+        )
 
     def explain_score(self, qtext_or_terms, doc_id: int, *,
                       stem: bool = True) -> dict:
@@ -1266,11 +928,30 @@ class LocalSearcher:
             tff + K1 * (1.0 - B + B * dl.astype(np.float64) / self.avgdl)
         )
 
+    def _decode(self, rows):
+        """Tombstone-masked raw (doc_ids, tfs, doclens) of segment rows
+        (a _segments frame or a list of its rows), doc-sorted — the
+        one raw postings decode every serving path goes through."""
+        if isinstance(rows, pd.DataFrame):
+            rows = rows.itertuples(index=False)
+        parts = [(*decode_postings(r.doc_ids, r.tfs),
+                  decode_varints(r.doclens).astype(np.int64)) for r in rows]
+        if not parts:
+            z = np.empty(0, np.int64)
+            return z, z, z
+        if len(parts) == 1:
+            d, tf, dl = parts[0]
+        else:
+            d, tf, dl = (np.concatenate(p) for p in zip(*parts))
+            order = np.argsort(d, kind="stable")
+            d, tf, dl = d[order], tf[order], dl[order]
+        return mask_deleted(self._deleted, d, tf, dl)
+
     def _seg_decode(self, term: str, row, idf_t: float):
         """Decoded (doc_ids, idf*tfnorm contributions) for one segment,
         cached per (term, salt, seg). The contribution array is
         query-INDEPENDENT (idf is a corpus constant per term), so the
-        cache is shared by the AND and OR paths and across queries."""
+        cache is shared by every BM25 shape and across queries."""
         hit_outer = self._lru_hit(self._seg_decoded, term)
         if hit_outer is None and len(self._seg_decoded) >= self._cache_terms:
             self._seg_decoded.pop(next(iter(self._seg_decoded)))
@@ -1278,9 +959,7 @@ class LocalSearcher:
         key = (row.salt, row.seg)
         hit = cache.get(key)
         if hit is None:
-            cand, ctf = decode_postings(row.doc_ids, row.tfs)
-            cdl = decode_varints(row.doclens).astype(np.int64)
-            cand, ctf, cdl = mask_deleted(self._deleted, cand, ctf, cdl)
+            cand, ctf, cdl = self._decode([row])
             hit = (cand, idf_t * self._tfnorm(ctf, cdl))
             cache[key] = hit
         return hit
@@ -1425,180 +1104,6 @@ class LocalSearcher:
             ):
                 self._load_full(t, idf[t])
 
-    def _search_and_warm(self, qterms, idf, k, excl=None, after=None,
-                         allow=None):
-        """Serving fast path (AND): every term's merged list is already
-        decoded+cached, so the whole intersection runs as a handful of
-        numpy ops — no per-segment Python loop. Only routed when warm;
-        cold queries keep the block-max path (its segment pruning
-        avoids decode work the vectorized path would have to pay).
-
-        Float additions run in the SAME order as the block-max path
-        (rarest term's contribution first, then the remaining terms in
-        query order) so results are bit-identical, not just
-        rank-identical."""
-        rarest = min(qterms, key=lambda t: self._df[t])
-        docs, contrib = self._load_full(rarest, idf[rarest])
-        scores = contrib.copy()
-        alive = self._eligible(docs, excl, allow)
-        for t in qterms:
-            if t == rarest:
-                continue
-            od, oc = self._load_full(t, idf[t])
-            if od.size == 0:
-                return []
-            pos = np.searchsorted(od, docs)
-            pos_c = np.clip(pos, 0, od.size - 1)
-            hit = od[pos_c] == docs
-            alive &= hit
-            scores = scores + np.where(hit, oc[pos_c], 0.0)
-        self.last_segments_skipped = 0
-        ca, sa = docs[alive], scores[alive]
-        return self._vector_topk(ca, self._boosted(ca, sa), k, after)
-
-    def _search_or_warm(self, qterms, idf, k, excl=None, after=None,
-                        msm: int = 1, allow=None):
-        """Serving fast path (OR): scatter-add each term's cached
-        contribution list into the union doc array, in the same sorted
-        term order the block-max path uses — per-doc addition sequences
-        match bit-exactly (x+0.0 == 0.0+x == x for finite floats).
-        NOT-terms shrink the union up front; contribution scatter then
-        guards membership (an od outside the union is excluded)."""
-        parts = [self._load_full(t, idf[t]) for t in qterms]
-        union = np.unique(np.concatenate([p[0] for p in parts]))
-        if excl is not None or allow is not None:
-            union = union[self._eligible(union, excl, allow)]
-        if union.size == 0:
-            return []
-        scores = np.zeros(union.size, dtype=np.float64)
-        counts = np.zeros(union.size, dtype=np.int32) if msm > 1 else None
-        for od, oc in parts:
-            if od.size:
-                pos = np.searchsorted(union, od)
-                pos_c = np.minimum(pos, union.size - 1)
-                hit = union[pos_c] == od
-                # od is strictly increasing per term -> hit indices are
-                # unique; fancy += is a safe (and faster) scatter-add
-                scores[pos_c[hit]] += oc[hit]
-                if counts is not None:
-                    counts[pos_c[hit]] += 1
-        if counts is not None:
-            # minimum-should-match: structural filter only — scores of
-            # surviving docs are the plain OR sums
-            keep_m = counts >= msm
-            union, scores = union[keep_m], scores[keep_m]
-        self.last_segments_skipped = 0
-        return self._vector_topk(union, self._boosted(union, scores), k, after)
-
-    def _search_or(
-        self, qterms: list[str], k: int, prune: bool, excl=None, after=None,
-        msm: int = 1, allow=None,
-    ) -> list[tuple[int, float]]:
-        """Disjunctive (OR) top-k: block-max pruned union scoring.
-
-        Every query term's every segment is a candidate generator; a
-        doc is generated only by its FIRST containing term (fixed term
-        order) so it is scored exactly once, with contributions from
-        ALL terms containing it. Segment upper bound =
-        own idf*max_tfnorm + sum over other terms of their best
-        overlapping-segment bound; since any doc in the segment scores
-        <= that bound, skipping bound<theta segments is exact — a doc
-        whose every containing segment is pruned cannot reach the heap
-        (each containing segment's bound dominates its full score).
-        Pruning gates candidate GENERATION only; contribution lookups
-        for surviving candidates always read the real lists."""
-        qterms = sorted(qterms, key=lambda t: (self._df[t], t))
-        idf = {t: self._idf(t) for t in qterms}
-        if prune and self._fast:
-            self._promote_repeats(qterms, idf)
-            if self._warm(qterms):
-                return self._search_or_warm(qterms, idf, k, excl, after,
-                                            msm, allow)
-        per_term = []  # (term, segs_df) in fixed dedup order
-        for t in qterms:
-            per_term.append((t, self._segments(t)))
-
-        # segment entries with full OR upper bounds
-        entries = []  # (ub, term_idx, row)
-        for i, (t, segs) in enumerate(per_term):
-            if len(segs) == 0:
-                continue
-            s_first = segs.first_doc.to_numpy()
-            s_last = segs.last_doc.to_numpy()
-            ub = idf[t] * segs.max_tfnorm.to_numpy().astype(np.float64)
-            for j, (u, osegs) in enumerate(per_term):
-                if j == i or len(osegs) == 0:
-                    continue
-                ub = ub + idf[u] * _overlap_bound(
-                    osegs.first_doc.to_numpy(), osegs.last_doc.to_numpy(),
-                    osegs.max_tfnorm.to_numpy(), s_first, s_last,
-                )
-            for r, row in enumerate(segs.itertuples(index=False)):
-                # +bmax keeps the bound valid over boosted final scores
-                entries.append((float(ub[r]) + self._bmax, i, row))
-        entries.sort(key=lambda e: -e[0])
-
-        heap: list[tuple[float, int]] = []
-        # cursor pagination: only docs strictly after `after` may enter
-        # the heap. Pruning stays exact — theta is the k-th best among
-        # ELIGIBLE docs, and a segment bound below theta cannot hold an
-        # eligible doc that would displace it.
-        a_item = (after[1], -int(after[0])) if after is not None else None
-
-        def offer(doc: int, score: float) -> None:
-            item = (score, -doc)
-            if a_item is not None and item >= a_item:
-                return
-            if len(heap) < k:
-                heapq.heappush(heap, item)
-            elif item > heap[0]:
-                heapq.heapreplace(heap, item)
-
-        skipped = 0
-        for n_done, (ub, i, row) in enumerate(entries):
-            # strict '<' keeps equal-score smaller-doc_id tie winners
-            if prune and len(heap) == k and ub < heap[0][0]:
-                skipped += len(entries) - n_done
-                break
-            t = per_term[i][0]
-            cand, scores = self._seg_decode(t, row, idf[t])
-            scores = scores.copy()
-            keep = self._eligible(cand, excl, allow)
-            n_hit = np.ones(cand.size, dtype=np.int32) if msm > 1 else None
-            for j, (u, _) in enumerate(per_term):
-                if j == i:
-                    continue
-                od, oc = self._load_full(u, idf[u])
-                if od.size == 0:
-                    continue
-                pos = np.searchsorted(od, cand)
-                pos_c = np.clip(pos, 0, od.size - 1)
-                hit = od[pos_c] == cand
-                if j < i:
-                    keep &= ~hit  # doc is driven by its first term only
-                scores = scores + np.where(hit, oc[pos_c], 0.0)
-                if n_hit is not None:
-                    n_hit += hit
-            if n_hit is not None:
-                # minimum-should-match removes candidates only, so every
-                # segment bound stays a valid upper bound (pruning exact)
-                keep &= n_hit >= msm
-            ca, sa = cand[keep], scores[keep]
-            sa = self._boosted(ca, sa)
-            if after is not None and ca.size:
-                # BEFORE the per-segment k-cut: the segment's k best
-                # may all be pre-cursor docs
-                keep_a = self._after_mask(ca, sa, after)
-                ca, sa = ca[keep_a], sa[keep_a]
-            if ca.size > k:
-                order_k = np.lexsort((ca, -sa))[:k]
-                ca, sa = ca[order_k], sa[order_k]
-            for doc, sc in zip(ca, sa):
-                offer(int(doc), float(sc))
-        self.last_segments_skipped = skipped
-        out = sorted(heap, key=lambda it: (-it[0], -it[1]))
-        return [(-nd, s) for s, nd in out]
-
     def search(
         self, qtext_or_terms, *, k: int = 10, stem: bool = True,
         prune: bool = True, mode: str = "and", fast: bool = True,
@@ -1612,27 +1117,22 @@ class LocalSearcher:
         mode="or" — missing terms are dropped, not fatal).
         exclude: NOT-terms (list, or raw text analyzed the same way) —
         docs containing ANY of them are suppressed; surviving docs'
-        scores are unaffected. Block-max pruning stays exact: exclusion
-        only removes candidates, so every segment bound remains a valid
-        upper bound and theta only ever reflects eligible docs.
-        prune=False disables the block-max skip (used by the
-        equivalence property tests). fast=False forces the block-max
-        path even when every term is warm in the serving cache (the
-        warm vectorized path is result-identical; property-tested).
+        scores are unaffected.
+        prune=False routes the exhaustive scatter (used by the
+        equivalence property tests). fast=False forces block-max even
+        when every term is warm in the serving cache.
         after: cursor pagination (search_after semantics) — pass the
         previous page's last hit (doc_id, score), exactly as returned,
         to get the next k results strictly after it in (score desc,
-        doc_id asc) order;
-        concatenated pages reproduce the full ranking exactly
-        (property-tested on every path). Exact float equality against
-        the cursor is safe: serving scores are bit-identical across
-        repeats (warm == cold bit-identity).
+        doc_id asc) order; concatenated pages reproduce the full
+        ranking exactly (property-tested on every path). Exact float
+        equality against the cursor is safe because serving scores are
+        bit-identical across paths and repeats.
         restrict: filter-clause PRE-filter (site: scoping, tenant
         isolation, date windows...) — an iterable of ALLOWED doc_ids;
         only members can be returned, survivor scores unchanged.
         Applied at candidate generation on every path (never a
-        post-filter over a ranked page); removal-only, so block-max
-        pruning stays exact. An empty set returns []."""
+        post-filter over a ranked page). An empty set returns []."""
         if mode not in ("and", "or"):
             raise ValueError(f"mode must be 'and' or 'or', got {mode!r}")
         msm = int(msm)
@@ -1649,7 +1149,6 @@ class LocalSearcher:
             qterms = list(dict.fromkeys(qtext_or_terms))
         if isinstance(exclude, str):
             exclude = analyze_query(exclude, stem=stem)
-        self._fast = fast
         excl = self._excluded_docs(exclude) if exclude else None
         excl = self._merge_excl(excl, exclude_docs)
         allow = self._norm_restrict(restrict)
@@ -1658,158 +1157,230 @@ class LocalSearcher:
         if after is not None:
             after = (int(after[0]), float(after[1]))
         if mode == "or":
-            qterms = [t for t in qterms if t in self._df]
             # msm counts PRESENT query terms (absent terms are dropped,
-            # not fatal, mirroring plain OR); a doc can never match
-            # more terms than exist in the index
+            # not fatal, mirroring plain OR)
+            qterms = sorted((t for t in qterms if t in self._df),
+                            key=lambda t: (self._df[t], t))
             if not qterms or msm > len(qterms):
                 return []
-            return self._search_or(qterms, k, prune, excl, after, msm,
-                                   allow)
-        if not qterms or any(t not in self._df for t in qterms):
-            return []
-        idf = {t: self._idf(t) for t in qterms}
+            terms, n_drive = qterms, len(qterms)
+            groups = [tuple(range(n_drive))]
+        else:
+            if not qterms or any(t not in self._df for t in qterms):
+                return []
+            rarest = min(qterms, key=lambda t: self._df[t])
+            terms = [rarest] + [t for t in qterms if t != rarest]
+            n_drive, groups = 1, [(j,) for j in range(len(terms))]
+        q = _Spec(terms, n_drive, groups, msm, [1.0] * len(terms),
+                  [self._idf(t) for t in terms])
         if prune and fast:
-            self._promote_repeats(qterms, idf)
-            if self._warm(qterms):
-                return self._search_and_warm(qterms, idf, k, excl, after,
-                                             allow)
+            self._promote_repeats(qterms, dict(zip(q.terms, q.par)))
+        return self._run(q, not prune or (fast and self._warm(q.terms)),
+                         k, excl, allow, after)
 
-        # rarest term drives the intersection
-        rarest = min(qterms, key=lambda t: self._df[t])
-        others = [t for t in qterms if t != rarest]
-        r_segs = self._segments(rarest)
-        if len(r_segs) == 0:
-            return []
+    def _run(self, q: _Spec, scatter: bool, k: int, excl, allow,
+             after=None) -> list[tuple[int, float]]:
+        """Run `q` on the chosen executor; the one writer of
+        last_segments_skipped."""
+        if scatter:
+            hits = self._vector_topk(*self._scatter(q, excl, allow), k, after)
+            skipped = 0
+        else:
+            hits, skipped = self._blockmax(q, k, excl, allow, after)
+        self.last_segments_skipped = skipped
+        return hits
 
-        # lazily-decoded other-term lists, restricted to the rarest
-        # span. Cached as (doc_ids, contrib) where contrib = idf_t *
-        # tfnorm(tf, dl) — query-INDEPENDENT per term, so repeated
-        # queries skip both the varint decode and the BM25 arithmetic.
-        r_lo = int(r_segs.first_doc.min())
-        r_hi = int(r_segs.last_doc.max())
-        other_lists: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        other_maxbound: dict[str, float] = {}
+    def _contrib(self, q: _Spec, j: int, tf, dl) -> np.ndarray:
+        """Term j's per-doc contributions from raw tfs / doclens."""
+        if q.mu is None:
+            return q.par[j] * self._tfnorm(tf, dl)
+        return (np.log1p(tf.astype(np.float64) / (q.mu * q.par[j]))
+                + np.log(q.mu / (q.mu + dl.astype(np.float64))))
 
-        def load_other(t: str):
-            if t in other_lists:
-                return other_lists[t]
-            hit = self._lru_hit(self._decoded_cache, t)
-            if hit is not None:
-                other_lists[t] = hit
-                return hit
-            segs = self._segments(t)
-            keep = segs[(segs.last_doc >= r_lo) & (segs.first_doc <= r_hi)]
-            if len(keep) == 0:
-                out = (np.empty(0, np.int64), np.empty(0, np.float64))
-                other_lists[t] = out
-                return out
-            docs, tfs, dls = [], [], []
-            for row in keep.itertuples(index=False):
-                dd, tt = decode_postings(row.doc_ids, row.tfs)
-                docs.append(dd)
-                tfs.append(tt)
-                dls.append(decode_varints(row.doclens).astype(np.int64))
-            d = np.concatenate(docs)
-            order = np.argsort(d, kind="stable")
-            contrib = idf[t] * self._tfnorm(
-                np.concatenate(tfs)[order], np.concatenate(dls)[order]
-            )
-            out = mask_deleted(self._deleted, d[order], contrib)
-            # cache only full-span decodes (subsets depend on the query)
-            if len(keep) == len(segs):
-                if len(self._decoded_cache) >= self._cache_terms:
-                    self._decoded_cache.pop(next(iter(self._decoded_cache)))
-                self._decoded_cache[t] = out
-            other_lists[t] = out
-            return out
+    def _list(self, q: _Spec, j: int, span=None):
+        """Term j's doc-sorted (doc_ids, contributions) from one raw
+        decode of its segments overlapping span=(lo, hi) — all of them
+        when None. Cached query-independently only when the decode
+        covers every segment (a partial list depends on the query)."""
+        t = q.terms[j]
+        cache, key = ((self._decoded_cache, t) if q.mu is None
+                      else (self._lmd_cache, (t, q.mu)))
+        hit = self._lru_hit(cache, key)
+        if hit is not None:
+            return hit
+        segs = self._segments(t)
+        rows = segs if span is None else segs[
+            (segs.last_doc >= span[0]) & (segs.first_doc <= span[1])
+        ]
+        d, tf, dl = self._decode(rows)
+        out = (d, self._contrib(q, j, tf, dl))
+        if len(rows) == len(segs):
+            if len(cache) >= self._cache_terms:
+                cache.pop(next(iter(cache)))
+            cache[key] = out
+        return out
 
-        # per-rarest-segment bound contributions of the other terms:
-        # instead of one GLOBAL max bound per other term, bound by the
-        # other term's segments overlapping the rarest segment's
-        # [first_doc, last_doc] (searchsorted prefix/suffix maxima —
-        # see _overlap_bound) — tighter than the global max (a
-        # non-overlapping segment cannot co-score any candidate), and
-        # still an upper bound, so exactness is preserved while more
-        # segments prune.
-        r_first = r_segs.first_doc.to_numpy()
-        r_last = r_segs.last_doc.to_numpy()
-        others_ub_vec = np.zeros(len(r_segs), dtype=np.float64)
-        for t in others:
-            segs = self._segments(t)
-            if len(segs) == 0:
-                other_maxbound[t] = 0.0
+    def _full(self, q: _Spec, j: int):
+        """Term j's full cached (doc_ids, contributions) list."""
+        if q.mu is None:
+            return self._load_full(q.terms[j], q.par[j])
+        return self._list(q, j)
+
+    @staticmethod
+    def _checks(q: _Spec, sure) -> list[list[tuple]]:
+        """Per term index: the match groups to test once that term's
+        hits are known. A group holding every term of `sure` (terms all
+        candidates contain; None when unknown) needs no test."""
+        out = [[] for _ in q.terms]
+        for g in q.groups:
+            if sure is None or not sure.issubset(g):
+                out[max(g)].append(g)
+        return out
+
+    def _probe(self, q: _Spec, cand, keep, get, checks, i=None, c=None):
+        """Score `cand` over every term in spec order — term i's
+        contributions `c` are known, every other term j is probed in
+        get(j) — and narrow `keep` by the match predicate and the
+        first-driving-term dedup. Stops once no candidate survives.
+        Returns (scores, keep)."""
+        if i is None:
+            scores = np.zeros(cand.size, dtype=np.float64)
+        else:
+            scores = c if q.w[i] == 1.0 else c * q.w[i]
+        n_hit = np.zeros(cand.size, dtype=np.int32) if q.msm > 1 else None
+        hits = []
+        for j, checks_j in enumerate(checks):
+            if j == i:
+                hit = True
+            else:
+                od, oc = get(j)
+                if od.size:
+                    pos = np.minimum(np.searchsorted(od, cand), od.size - 1)
+                    hit = od[pos] == cand
+                    oj = oc[pos] if q.w[j] == 1.0 else oc[pos] * q.w[j]
+                    scores = scores + np.where(hit, oj, 0.0)
+                else:
+                    hit = np.zeros(cand.size, dtype=bool)
+                if i is not None and j < i:
+                    keep &= ~hit  # driven by an earlier driving term
+            hits.append(hit)
+            if n_hit is not None:
+                n_hit += hit
+            for g in checks_j:
+                m = hits[g[0]]
+                for u in g[1:]:
+                    m = m | hits[u]
+                keep &= m
+            if checks_j and not keep.any():
+                break
+        if n_hit is not None:
+            keep &= n_hit >= q.msm
+        return scores, keep
+
+    def _scatter(self, q: _Spec, excl=None, allow=None, *, cand=None,
+                 lists=None):
+        """Scatter executor: score `cand` (sorted unique) — by default
+        the union of the driving lists — against every term's full
+        list (`lists`, or the cached ones). Returns the matching
+        (doc_ids, scores), statically boosted for BM25."""
+        if lists is None:
+            lists = [self._full(q, j) for j in range(len(q.terms))]
+        i = c = sure = None
+        if cand is None and q.n_drive == 1:
+            i, sure = 0, {0}
+            cand, c = lists[0]
+        elif cand is None:
+            sure = set(range(q.n_drive))
+            cand = np.unique(np.concatenate(
+                [lists[j][0] for j in range(q.n_drive)]
+            ))
+        scores, keep = self._probe(
+            q, cand, self._eligible(cand, excl, allow), lists.__getitem__,
+            self._checks(q, sure), i, c,
+        )
+        ca, sa = cand[keep], scores[keep]
+        return ca, (self._boosted(ca, sa) if q.mu is None else sa)
+
+    def _blockmax(self, q: _Spec, k: int, excl=None, allow=None,
+                  after=None):
+        """Block-max executor (see module docstring). Returns
+        (hits, segments skipped)."""
+        segs = [self._segments(t) for t in q.terms]
+
+        def bound(j):
+            m = segs[j].max_tfnorm.to_numpy().astype(np.float64)
+            if q.mu is None:
+                return q.w[j] * q.par[j] * m
+            return self._lmd_seg_bounds(m, q.par[j], q.mu)
+
+        ubs = [bound(j) if len(s) else None for j, s in enumerate(segs)]
+        bmax = self._bmax if q.mu is None else 0.0
+        entries = []  # (bound, driving term index, segment row)
+        los, his = [], []  # the driving terms' doc span
+        for i in range(q.n_drive):
+            if len(segs[i]) == 0:
                 continue
-            tb_ = segs.max_tfnorm.to_numpy()
-            other_maxbound[t] = idf[t] * float(tb_.max())
-            others_ub_vec += idf[t] * _overlap_bound(
-                segs.first_doc.to_numpy(), segs.last_doc.to_numpy(),
-                tb_, r_first, r_last,
-            )
+            first = segs[i].first_doc.to_numpy()
+            last = segs[i].last_doc.to_numpy()
+            los.append(int(first.min()))
+            his.append(int(last.max()))
+            ub = ubs[i]
+            for u, o in enumerate(segs):
+                if u != i and len(o):
+                    ub = ub + _overlap_bound(
+                        o.first_doc.to_numpy(), o.last_doc.to_numpy(),
+                        ubs[u], first, last,
+                    )
+            entries += [(float(b) + bmax, i, row) for b, row in
+                        zip(ub, segs[i].itertuples(index=False))]
+        entries.sort(key=lambda e: -e[0])
 
+        span = (min(los), max(his)) if los else None
+        lists: dict[int, tuple] = {}
+
+        def get(j):
+            if j not in lists:
+                lists[j] = (self._full(q, j) if j < q.n_drive
+                            else self._list(q, j, span))
+            return lists[j]
+
+        checks = [self._checks(q, {i}) for i in range(q.n_drive)]
         heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap
-        a_item = (after[1], -int(after[0])) if after is not None else None
-
-        def theta() -> float:
-            return heap[0][0] if len(heap) == k else -math.inf
 
         def offer(doc: int, score: float) -> None:
             item = (score, -doc)
-            if a_item is not None and item >= a_item:
-                return  # pre-cursor doc (earlier page) — ineligible
             if len(heap) < k:
                 heapq.heappush(heap, item)
             elif item > heap[0]:
                 heapq.heapreplace(heap, item)
 
-        # descending bound order grows theta fastest (+bmax keeps every
-        # bound valid over statically-boosted final scores)
-        r_segs = r_segs.assign(
-            ub=idf[rarest] * r_segs.max_tfnorm.to_numpy() + others_ub_vec
-            + self._bmax
-        )
-        r_segs = r_segs.sort_values("ub", ascending=False)
         skipped = 0
-        n_rows = len(r_segs)
-        for i, row in enumerate(r_segs.itertuples(index=False)):
-            # strict '<': a segment whose bound EQUALS theta may hold an
-            # equal-score doc with a smaller doc_id (tie-break winner)
-            if prune and len(heap) == k and row.ub < theta():
-                # bounds are sorted descending: everything after this
-                # row is pruned too — stop instead of scanning on
-                skipped += n_rows - i
+        for n_done, (ub, i, row) in enumerate(entries):
+            if len(heap) == k and ub < heap[0][0]:
+                skipped = len(entries) - n_done  # bounds sorted: all pruned
                 break
-            cand, c_contrib = self._seg_decode(rarest, row, idf[rarest])
-            scores = c_contrib.copy()
-            alive = self._eligible(cand, excl, allow)
-            for t in others:
-                od, oc = load_other(t)
-                if od.size == 0:
-                    alive[:] = False
-                    break
-                pos = np.searchsorted(od, cand)
-                pos_c = np.clip(pos, 0, od.size - 1)
-                hit = od[pos_c] == cand
-                alive &= hit
-                if not alive.any():
-                    break
-                scores = scores + np.where(hit, oc[pos_c], 0.0)
-            ca, sa = cand[alive], scores[alive]
-            sa = self._boosted(ca, sa)
+            if q.mu is None:
+                cand, c = self._seg_decode(q.terms[i], row, q.par[i])
+            else:
+                cand, tf, dl = self._decode([row])
+                c = self._contrib(q, i, tf, dl)
+            scores, keep = self._probe(
+                q, cand, self._eligible(cand, excl, allow), get, checks[i],
+                i, c,
+            )
+            ca, sa = cand[keep], scores[keep]
+            if q.mu is None:
+                sa = self._boosted(ca, sa)
             if after is not None and ca.size:
                 # BEFORE the per-segment k-cut: the segment's k best
                 # may all be pre-cursor docs
                 keep_a = self._after_mask(ca, sa, after)
                 ca, sa = ca[keep_a], sa[keep_a]
             if ca.size > k:
-                # vectorized per-segment top-k: the heap only ever
-                # needs a segment's k best by (score desc, doc_id asc);
-                # lexsort keeps the tie-break exact. Cuts the Python
-                # offer loop from |segment| to k iterations.
+                # the heap only needs a segment's k best by (score
+                # desc, doc_id asc) — lexsort keeps the tie-break exact
                 order_k = np.lexsort((ca, -sa))[:k]
                 ca, sa = ca[order_k], sa[order_k]
-            for doc, sc in zip(ca, sa):
-                offer(int(doc), float(sc))
-        self.last_segments_skipped = skipped
-        out = sorted(heap, key=lambda it: (-it[0], -it[1]))
-        return [(-nd, s) for s, nd in out]
+            for doc, sc in zip(ca.tolist(), sa.tolist()):
+                offer(doc, sc)
+        return [(-nd, s) for s, nd in sorted(heap, reverse=True)], skipped

@@ -246,3 +246,17 @@ def test_msm_equal_to_nterms_is_and_scored_or(searcher, corpus_docs,
     assert [d for d, _ in got] == [d for d, _ in want]
     for (_, gs), (_, ws) in zip(got, want):
         assert gs == pytest.approx(ws, abs=1e-9)
+
+
+@pytest.mark.parametrize("mode", ["and", "or"])
+def test_lmd_ignores_static_boosts(index_dir, mode):
+    """Static boosts are a BM25 prior: LM-Dirichlet scores never carry
+    them — on the single-cold-term block-max path and the scatter."""
+    boosted = LocalSearcher(index_dir)
+    assert boosted._boost is not None
+    plain = LocalSearcher(index_dir)
+    plain.clear_static_boosts()
+    for q in (["the"], ["window"], ["spark", "join"], ["the", "fast"]):
+        got = boosted.search_lmd(q, k=10, stem=False, mode=mode)
+        assert got and got == plain.search_lmd(q, k=10, stem=False,
+                                               mode=mode), q

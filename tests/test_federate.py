@@ -199,6 +199,22 @@ def test_federated_lmd_equals_fresh_build(rich):
         == ref.search_lmd("the", exclude="spark", k=10, stem=False)
 
 
+def test_federated_lmd_and_with_all_tombstoned_term(dirs):
+    """A query term whose every posting is tombstoned in one sub leaves
+    that sub no LM-Dirichlet AND match. The global cf override routes
+    the pruned path despite the live tombstones, so the emptied term
+    must still count in the conjunction, not drop out of it."""
+    import numpy as np
+
+    a, _, _ = dirs
+    fed = FederatedSearcher([a, a])  # two subs sharing every term
+    # planted before the first query: _GlobalCF sums masked cf lazily
+    fed.subs[0]._deleted = np.array([5], dtype=np.int64)  # 'number5'
+    hits = fed.search_lmd(["number5", "spark"], k=50, stem=False,
+                          mode="and")
+    assert [d for d, _ in hits] == [fed.offsets[1] + 5]
+
+
 def test_federated_explain_equals_fresh_build(pair):
     fed, ref = pair
     # docs from both sides of the boundary, a deleted-style absent id,

@@ -191,3 +191,44 @@ def test_prefix_terms_matches_corpus(searcher, documents_pdf):
 
     with _pytest.raises(ValueError):
         searcher.prefix_terms("")
+
+
+@pytest.mark.parametrize("qtext,kw", [
+    ("the fast", {"mode": "and"}),
+    ("spark join window", {"mode": "or"}),
+    ("the fast spark", {"mode": "or", "msm": 2}),
+    ("spark|window the", None),  # grouped boolean
+], ids=["and", "or", "msm2", "grouped"])
+def test_paths_bitexact_under_tombstones(index_dir, documents_pdf,  # noqa: F811
+                                         qtext, kw):
+    """Block-max (fast=False), exhaustive scatter (prune=False) and the
+    warm scatter agree bit-exactly with tombstones live, first page and
+    one cursor page, and never return a tombstoned doc."""
+    s = LocalSearcher(index_dir)
+    # planted before the first decode: every cache bakes the mask in
+    s._deleted = np.asarray(
+        sorted(int(d) for d in documents_pdf.doc_id if d % 3 == 0),
+        dtype=np.int64,
+    )
+
+    def run(**o):
+        if kw is None:
+            return s.search_grouped(qtext, k=8, stem=False, **o)
+        return s.search(qtext, k=8, stem=False, **kw, **o)
+
+    def paths(**o):
+        cold = run(fast=False, **o)
+        ref = run(prune=False, **o)
+        terms = qtext.replace("|", " ").split()
+        for t in terms:
+            s._load_full(t, s._idf(t))
+        assert s._warm(terms)
+        assert cold == ref == run(**o)
+        return cold
+
+    page1 = paths()
+    assert len(page1) == 8
+    assert not any(d % 3 == 0 for d, _ in page1)
+    page2 = paths(after=page1[-1])
+    assert page2 and not any(d % 3 == 0 for d, _ in page2)
+    assert not {d for d, _ in page1} & {d for d, _ in page2}
