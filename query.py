@@ -315,6 +315,8 @@ def main() -> None:
                          "(<index>/boosts, written by index_admin.py "
                          "pagerank) for this query — score pure BM25")
     args = ap.parse_args()
+    if args.k < 0:
+        ap.error("-k must be >= 0")
 
     if not os.path.isdir(args.index_dir) or not os.path.isdir(
         os.path.join(args.index_dir, "postings")

@@ -157,10 +157,10 @@ def _doclens(searcher, term: str, docs: np.ndarray) -> np.ndarray:
         segs = searcher._segments(term)
         parts_d: list[np.ndarray] = []
         parts_l: list[np.ndarray] = []
-        for row in segs.itertuples(index=False):
-            d, _ = decode_postings(row.doc_ids, row.tfs)
+        for r in range(len(segs)):
+            d, _ = decode_postings(segs.doc_ids[r], segs.tfs[r])
             parts_d.append(d)
-            parts_l.append(decode_varints(row.doclens).astype(np.int64))
+            parts_l.append(decode_varints(segs.doclens[r]).astype(np.int64))
         if not parts_d:
             return np.zeros(docs.size, dtype=np.int64)
         ad = np.concatenate(parts_d)
@@ -427,14 +427,14 @@ def explain_mixed(
         if term not in searcher._df:
             return 0, 0
         segs = searcher._segments(term)
-        for row in segs.itertuples(index=False):
-            if row.first_doc <= doc_id <= row.last_doc:
-                docs, tfs = decode_postings(row.doc_ids, row.tfs)
-                pos = np.searchsorted(docs, doc_id)
-                if pos < docs.size and docs[pos] == doc_id:
-                    dls = decode_varints(row.doclens).astype(np.int64)
-                    dl_val = int(dls[pos])
-                    return int(tfs[pos]), dl_val
+        for r in np.flatnonzero((segs.first_doc <= doc_id)
+                                & (segs.last_doc >= doc_id)):
+            docs, tfs = decode_postings(segs.doc_ids[r], segs.tfs[r])
+            pos = np.searchsorted(docs, doc_id)
+            if pos < docs.size and docs[pos] == doc_id:
+                dls = decode_varints(segs.doclens[r]).astype(np.int64)
+                dl_val = int(dls[pos])
+                return int(tfs[pos]), dl_val
         return 0, 0
 
     # term clauses first (they establish doclen for the phrase rows

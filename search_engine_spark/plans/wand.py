@@ -2,11 +2,13 @@
 index in-process (SURVEY.md section 3.2, M4).
 
 This path crosses NO process boundary — a thin pyarrow reader opens
-only the parquet row groups of the query's (bucket, term) keys and
-evaluates entirely in numpy. That is what makes millisecond p50
-feasible; a Spark job pays a ~100ms+ scheduling floor (the distributed
-IndexReader path remains the correctness/batch path and must return
-identical results — property-tested).
+only the parquet row groups of the query's (bucket, term) keys, keeps
+the term's rows with an Arrow filter, holds its segments as numpy
+columns (_Segs) and evaluates entirely in numpy; no pandas object is
+built per term. That is what makes millisecond p50 feasible; a Spark
+job pays a ~100ms+ scheduling floor (the distributed IndexReader path
+remains the correctness/batch path and must return identical results
+— property-tested).
 
 Every query shape is one _Spec run by one of two executors:
 
@@ -54,7 +56,8 @@ import time
 from typing import NamedTuple
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 
@@ -110,6 +113,29 @@ def _overlap_bound(of: np.ndarray, ol: np.ndarray, ob: np.ndarray,
     return np.minimum(a, b)
 
 
+class _Segs:
+    """One term's segments as columns, in (file, row group) order:
+    numpy metadata — max_tfnorm as float64 with the index's tfnorm
+    scale applied — and per-segment blobs as object arrays. Callers
+    select segments by index arrays (LocalSearcher._decode rows)."""
+
+    __slots__ = ("first_doc", "last_doc", "salt", "seg", "n",
+                 "max_tfnorm", "doc_ids", "tfs", "doclens")
+
+    def __init__(self, tbl: pa.Table, tfnorm_scale: float):
+        for f in ("first_doc", "last_doc", "salt", "seg", "n"):
+            setattr(self, f, tbl[f].to_numpy())
+        for f in ("doc_ids", "tfs", "doclens"):
+            setattr(self, f, tbl[f].to_numpy(zero_copy_only=False))
+        m = tbl["max_tfnorm"].to_numpy()
+        if tfnorm_scale != 1.0:
+            m = m * tfnorm_scale
+        self.max_tfnorm = m.astype(np.float64)
+
+    def __len__(self) -> int:
+        return self.first_doc.size
+
+
 class _LazyTermMap:
     """Mapping view over the lazy dictionary: `term in m` / `m[term]`
     without materializing the vocabulary (field = 'df' or 'bucket')."""
@@ -134,12 +160,14 @@ class LocalSearcher:
     Open cost is O(parquet footers): stats + collection constants plus
     a per-row-group (min, max) index over dictionary AND postings
     files. The vocabulary itself is NEVER materialized — a term's
-    dictionary row is found by hashing to its bucket locally
-    (functions.hashing, JVM-bit-equal) and reading only the row groups
-    whose term range admits it, LRU-cached. Memory is therefore
-    bounded by the caches, not the vocabulary size (a 10^8-term
-    dictionary would otherwise be tens of GB of Python dicts on a
-    serving node).
+    dictionary row (df and cf in one read) is found by hashing to its
+    bucket locally (functions.hashing, JVM-bit-equal) and reading only
+    the row groups whose term range admits it, LRU-cached. A term's
+    postings row groups are read the same way, filtered to the term's
+    rows in Arrow, and held as columns (_Segs), LRU-cached per term.
+    Memory is therefore bounded by the caches, not the vocabulary size
+    (a 10^8-term dictionary would otherwise be tens of GB of Python
+    dicts on a serving node).
     """
 
     _COLUMNS = ["term", "seg", "salt", "n", "doc_ids", "tfs", "doclens",
@@ -244,7 +272,7 @@ class LocalSearcher:
                     lo = stats.min if stats is not None else None
                     hi = stats.max if stats is not None else None
                     self._dict_rg.setdefault(bucket, []).append((path, rg, lo, hi))
-        self._dict_cache: dict[str, tuple[int, int] | None] = {}
+        self._dict_cache: dict[str, tuple[int, int, int | None] | None] = {}
         self._df = _LazyTermMap(self, "df")
         self._bucket = _LazyTermMap(self, "bucket")
         self._dataset = ds.dataset(
@@ -271,7 +299,7 @@ class LocalSearcher:
                 lo = stats.min if stats is not None else None
                 hi = stats.max if stats is not None else None
                 self._rg.setdefault(bucket, []).append((path, rg, lo, hi))
-        self._term_cache: dict[str, pd.DataFrame] = {}
+        self._term_cache: dict[str, _Segs] = {}
         # per-term query counts: a term is promoted to the full-list
         # cache (enabling the vectorized warm path) on its SECOND
         # encounter — first-contact queries keep block-max pruning's
@@ -310,7 +338,6 @@ class LocalSearcher:
         # per-segment LMD bounds need
         self._lmd_cache: dict[tuple, tuple] = {}
         self._lmd_dl_range: tuple[int, int] | None = None
-        self._dict_cf_cache: dict[str, int | None] = {}
         boosts_dir = os.path.join(index_dir, "boosts")
         # fail LOUDLY on a corrupt boosts table — serving with a bad
         # prior mis-ranks every query. fsck passes load_boosts=False
@@ -414,8 +441,6 @@ class LocalSearcher:
             ]
             out.sort()
             return out[:limit]
-        import pyarrow.compute as pc
-
         out = []
         for rgs in self._dict_rg.values():
             for path, rg, lo, hi in rgs:
@@ -471,8 +496,6 @@ class LocalSearcher:
                     if pat.search(t)
                 ]
         else:
-            import pyarrow.compute as pc
-
             hits = []
             for rgs in self._dict_rg.values():
                 for path, rg, _lo, _hi in rgs:
@@ -549,7 +572,7 @@ class LocalSearcher:
             self._lmd_cf is not None or self._deleted.size == 0
         ):
             cfs = [self._lmd_cf[t] if self._lmd_cf is not None
-                   else self._dict_cf(t) for t in qterms]
+                   else self._dict_lookup(t)[2] for t in qterms]
             if all(cf is not None and cf > 0 for cf in cfs):
                 q = q._replace(par=[float(cf) / total for cf in cfs])
                 cold = (n == 1 and (qterms[0], q.mu) not in self._lmd_cache
@@ -582,36 +605,6 @@ class LocalSearcher:
         if self._dict_lookup(term) is None:
             return 0
         return int(self._decode(self._segments(term))[1].sum())
-
-    def _dict_cf(self, term: str) -> int | None:
-        """Exact collection frequency from the dictionary (row-group
-        pruned read of the cf column, LRU-cached). None for absent
-        terms or pre-cf dictionaries."""
-        cache = self._dict_cf_cache
-        if term in cache:
-            v = cache.pop(term)
-            cache[term] = v
-            return v
-        import pyarrow.compute as pc
-
-        from search_engine_spark.functions.hashing import term_bucket
-
-        b = term_bucket(term, self.n_buckets)
-        val: int | None = None
-        for path, rg, lo, hi in self._dict_rg.get(b, ()):
-            if (lo is None or lo <= term) and (hi is None or term <= hi):
-                tbl = self._dict_files[path].read_row_groups(
-                    [rg], columns=["term", "cf"]
-                )
-                sel = tbl.filter(pc.equal(tbl["term"], term))
-                if sel.num_rows:
-                    raw = sel["cf"][0].as_py()
-                    val = None if raw is None else int(raw)
-                    break
-        if len(cache) >= self._DICT_CACHE:
-            cache.pop(next(iter(cache)))
-        cache[term] = val
-        return val
 
     def _dl_range(self) -> tuple[int, int]:
         """(dl_min, dl_max) over the docs table, from parquet footer
@@ -775,13 +768,12 @@ class LocalSearcher:
                 row["df"] = int(self._df[t])
                 row["idf"] = self._idf(t)
                 segs = self._segments(t)
-                hit = segs[(segs.first_doc <= doc_id)
-                           & (segs.last_doc >= doc_id)]
-                for seg in hit.itertuples(index=False):
-                    docs, tfs = decode_postings(seg.doc_ids, seg.tfs)
+                for r in np.flatnonzero((segs.first_doc <= doc_id)
+                                        & (segs.last_doc >= doc_id)):
+                    docs, tfs = decode_postings(segs.doc_ids[r], segs.tfs[r])
                     i = int(np.searchsorted(docs, doc_id))
                     if i < len(docs) and docs[i] == doc_id:
-                        dls = decode_varints(seg.doclens)
+                        dls = decode_varints(segs.doclens[r])
                         row["matched"] = True
                         row["tf"] = int(tfs[i])
                         row["doclen"] = int(dls[i])
@@ -848,32 +840,37 @@ class LocalSearcher:
         hits = self.search(qterms, k=k + 1, mode="or", stem=stem)
         return [(d, s) for d, s in hits if d != int(doc_id)][:k]
 
-    def _dict_lookup(self, term: str) -> tuple[int, int] | None:
-        """(df, bucket) for term, or None if absent — row-group-pruned
-        dictionary read, LRU-cached (misses cached too: absent query
-        terms are common and must stay cheap)."""
+    def _dict_lookup(self, term: str) -> tuple[int, int, int | None] | None:
+        """(df, bucket, cf) for term, or None if absent — one
+        row-group-pruned dictionary read, LRU-cached (misses cached
+        too: absent query terms are common and must stay cheap). cf is
+        None on a pre-cf dictionary (and on the eager path)."""
         if self._eager:
             df = self._eager_df.get(term)
-            return None if df is None else (df, self._eager_bucket[term])
+            return (None if df is None
+                    else (df, self._eager_bucket[term], None))
         cache = self._dict_cache
         if term in cache:
             val = cache.pop(term)
             cache[term] = val  # refresh recency
             return val
-        import pyarrow.compute as pc
-
         from search_engine_spark.functions.hashing import term_bucket
 
         b = term_bucket(term, self.n_buckets)
         row = None
         for path, rg, lo, hi in self._dict_rg.get(b, ()):
             if (lo is None or lo <= term) and (hi is None or term <= hi):
-                tbl = self._dict_files[path].read_row_groups(
-                    [rg], columns=["term", "df"]
+                pf = self._dict_files[path]
+                has_cf = "cf" in pf.schema_arrow.names
+                tbl = pf.read_row_groups(
+                    [rg], columns=["term", "df", "cf"] if has_cf
+                    else ["term", "df"]
                 )
                 sel = tbl.filter(pc.equal(tbl["term"], term))
                 if sel.num_rows:
-                    row = (int(sel["df"][0].as_py()), b)
+                    cf = sel["cf"][0].as_py() if has_cf else None
+                    row = (int(sel["df"][0].as_py()), b,
+                           None if cf is None else int(cf))
                     break
         if len(cache) >= self._DICT_CACHE:
             cache.pop(next(iter(cache)))
@@ -898,10 +895,11 @@ class LocalSearcher:
             cache[key] = cache.pop(key)
         return v
 
-    def _segments(self, term: str) -> pd.DataFrame:
-        """All segment rows for a term (metadata + blobs), read from
-        exactly the row groups whose stats admit the term; LRU-cached
-        per term for the serving hot set."""
+    def _segments(self, term: str) -> _Segs:
+        """All segments of a term (metadata + blobs) as columns, read
+        from exactly the row groups whose stats admit the term and
+        filtered to the term's rows in Arrow before any conversion;
+        LRU-cached per term for the serving hot set."""
         hit = self._lru_hit(self._term_cache, term)
         if hit is not None:
             return hit
@@ -909,14 +907,12 @@ class LocalSearcher:
         for path, rg, lo, hi in self._rg.get(self._bucket[term], ()):
             if (lo is None or lo <= term) and (hi is None or term <= hi):
                 tbl = self._files[path].read_row_groups([rg], columns=self._COLUMNS)
-                pdf = tbl.to_pandas()
-                parts.append(pdf[pdf.term == term])
-        out = (
-            pd.concat(parts, ignore_index=True)
-            if parts else pd.DataFrame(columns=self._COLUMNS)
+                parts.append(tbl.filter(pc.equal(tbl["term"], term)))
+        out = _Segs(
+            pa.concat_tables(parts) if parts
+            else self._dataset.schema.empty_table(),
+            self._tfnorm_scale,
         )
-        if self._tfnorm_scale != 1.0 and len(out):
-            out = out.assign(max_tfnorm=out.max_tfnorm * self._tfnorm_scale)
         if len(self._term_cache) >= self._cache_terms:
             self._term_cache.pop(next(iter(self._term_cache)))
         self._term_cache[term] = out
@@ -928,14 +924,13 @@ class LocalSearcher:
             tff + K1 * (1.0 - B + B * dl.astype(np.float64) / self.avgdl)
         )
 
-    def _decode(self, rows):
-        """Tombstone-masked raw (doc_ids, tfs, doclens) of segment rows
-        (a _segments frame or a list of its rows), doc-sorted — the
+    def _decode(self, segs: _Segs, rows=None):
+        """Tombstone-masked raw (doc_ids, tfs, doclens) of a term's
+        segments — all of them, or the indices `rows` — doc-sorted: the
         one raw postings decode every serving path goes through."""
-        if isinstance(rows, pd.DataFrame):
-            rows = rows.itertuples(index=False)
-        parts = [(*decode_postings(r.doc_ids, r.tfs),
-                  decode_varints(r.doclens).astype(np.int64)) for r in rows]
+        parts = [(*decode_postings(segs.doc_ids[r], segs.tfs[r]),
+                  decode_varints(segs.doclens[r]).astype(np.int64))
+                 for r in (range(len(segs)) if rows is None else rows)]
         if not parts:
             z = np.empty(0, np.int64)
             return z, z, z
@@ -947,8 +942,8 @@ class LocalSearcher:
             d, tf, dl = d[order], tf[order], dl[order]
         return mask_deleted(self._deleted, d, tf, dl)
 
-    def _seg_decode(self, term: str, row, idf_t: float):
-        """Decoded (doc_ids, idf*tfnorm contributions) for one segment,
+    def _seg_decode(self, term: str, segs: _Segs, r: int, idf_t: float):
+        """Decoded (doc_ids, idf*tfnorm contributions) for segment r,
         cached per (term, salt, seg). The contribution array is
         query-INDEPENDENT (idf is a corpus constant per term), so the
         cache is shared by every BM25 shape and across queries."""
@@ -956,10 +951,10 @@ class LocalSearcher:
         if hit_outer is None and len(self._seg_decoded) >= self._cache_terms:
             self._seg_decoded.pop(next(iter(self._seg_decoded)))
         cache = self._seg_decoded.setdefault(term, {})
-        key = (row.salt, row.seg)
+        key = (int(segs.salt[r]), int(segs.seg[r]))
         hit = cache.get(key)
         if hit is None:
-            cand, ctf, cdl = self._decode([row])
+            cand, ctf, cdl = self._decode(segs, (r,))
             hit = (cand, idf_t * self._tfnorm(ctf, cdl))
             cache[key] = hit
         return hit
@@ -974,8 +969,8 @@ class LocalSearcher:
         segs = self._segments(term)
         if len(segs) == 0:
             return np.empty(0, np.int64), np.empty(0, np.float64)
-        parts = [self._seg_decode(term, row, idf_t)
-                 for row in segs.itertuples(index=False)]
+        parts = [self._seg_decode(term, segs, r, idf_t)
+                 for r in range(len(segs))]
         if len(parts) == 1:
             out = parts[0]
         else:
@@ -1181,8 +1176,10 @@ class LocalSearcher:
     def _run(self, q: _Spec, scatter: bool, k: int, excl, allow,
              after=None) -> list[tuple[int, float]]:
         """Run `q` on the chosen executor; the one writer of
-        last_segments_skipped."""
-        if scatter:
+        last_segments_skipped. k < 1 asks for no hits."""
+        if k < 1:
+            hits, skipped = [], 0
+        elif scatter:
             hits = self._vector_topk(*self._scatter(q, excl, allow), k, after)
             skipped = 0
         else:
@@ -1209,12 +1206,11 @@ class LocalSearcher:
         if hit is not None:
             return hit
         segs = self._segments(t)
-        rows = segs if span is None else segs[
-            (segs.last_doc >= span[0]) & (segs.first_doc <= span[1])
-        ]
-        d, tf, dl = self._decode(rows)
+        rows = None if span is None else np.flatnonzero(
+            (segs.last_doc >= span[0]) & (segs.first_doc <= span[1]))
+        d, tf, dl = self._decode(segs, rows)
         out = (d, self._contrib(q, j, tf, dl))
-        if len(rows) == len(segs):
+        if rows is None or rows.size == len(segs):
             if len(cache) >= self._cache_terms:
                 cache.pop(next(iter(cache)))
             cache[key] = out
@@ -1308,7 +1304,7 @@ class LocalSearcher:
         segs = [self._segments(t) for t in q.terms]
 
         def bound(j):
-            m = segs[j].max_tfnorm.to_numpy().astype(np.float64)
+            m = segs[j].max_tfnorm
             if q.mu is None:
                 return q.w[j] * q.par[j] * m
             return self._lmd_seg_bounds(m, q.par[j], q.mu)
@@ -1320,19 +1316,15 @@ class LocalSearcher:
         for i in range(q.n_drive):
             if len(segs[i]) == 0:
                 continue
-            first = segs[i].first_doc.to_numpy()
-            last = segs[i].last_doc.to_numpy()
+            first, last = segs[i].first_doc, segs[i].last_doc
             los.append(int(first.min()))
             his.append(int(last.max()))
             ub = ubs[i]
             for u, o in enumerate(segs):
                 if u != i and len(o):
-                    ub = ub + _overlap_bound(
-                        o.first_doc.to_numpy(), o.last_doc.to_numpy(),
-                        ubs[u], first, last,
-                    )
-            entries += [(float(b) + bmax, i, row) for b, row in
-                        zip(ub, segs[i].itertuples(index=False))]
+                    ub = ub + _overlap_bound(o.first_doc, o.last_doc,
+                                             ubs[u], first, last)
+            entries += [(b + bmax, i, r) for r, b in enumerate(ub.tolist())]
         entries.sort(key=lambda e: -e[0])
 
         span = (min(los), max(his)) if los else None
@@ -1355,14 +1347,14 @@ class LocalSearcher:
                 heapq.heapreplace(heap, item)
 
         skipped = 0
-        for n_done, (ub, i, row) in enumerate(entries):
+        for n_done, (ub, i, r) in enumerate(entries):
             if len(heap) == k and ub < heap[0][0]:
                 skipped = len(entries) - n_done  # bounds sorted: all pruned
                 break
             if q.mu is None:
-                cand, c = self._seg_decode(q.terms[i], row, q.par[i])
+                cand, c = self._seg_decode(q.terms[i], segs[i], r, q.par[i])
             else:
-                cand, tf, dl = self._decode([row])
+                cand, tf, dl = self._decode(segs[i], (r,))
                 c = self._contrib(q, i, tf, dl)
             scores, keep = self._probe(
                 q, cand, self._eligible(cand, excl, allow), get, checks[i],

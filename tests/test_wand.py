@@ -232,3 +232,118 @@ def test_paths_bitexact_under_tombstones(index_dir, documents_pdf,  # noqa: F811
     page2 = paths(after=page1[-1])
     assert page2 and not any(d % 3 == 0 for d, _ in page2)
     assert not {d for d, _ in page1} & {d for d, _ in page2}
+
+
+@pytest.mark.parametrize("prune", [True, False], ids=["prune", "noprune"])
+@pytest.mark.parametrize("shape", ["and", "or", "msm", "grouped", "lmd"])
+def test_k0_returns_no_hits(searcher, shape, prune):
+    """k=0 asks for no hits: every executor returns [] (block-max used
+    to read the top of an empty heap). fast=False keeps block-max even
+    for terms an earlier test left warm; LMD routes block-max for one
+    cold term and the scatter for two."""
+    if shape == "grouped":
+        got = searcher.search_grouped("spark|window the", k=0, stem=False,
+                                      prune=prune, fast=not prune)
+    elif shape == "lmd":
+        got = searcher.search_lmd(["merge"] if prune else ["the", "data"],
+                                  k=0, stem=False)
+    else:
+        kw = {"and": {}, "or": {"mode": "or"},
+              "msm": {"mode": "or", "msm": 2}}[shape]
+        got = searcher.search("the fast spark", k=0, stem=False,
+                              prune=prune, fast=not prune, **kw)
+    assert got == []
+
+
+def test_cli_rejects_negative_k(index_dir):  # noqa: F811
+    import os
+    import subprocess
+    import sys
+
+    r = subprocess.run(
+        [sys.executable, "query.py", "--index-dir", index_dir, "the",
+         "-k", "-1"],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        capture_output=True, text=True, timeout=300,
+    )
+    assert r.returncode == 2 and "-k must be >= 0" in r.stderr
+
+
+def _copy_index(index_dir, tmp_path_factory, name):  # noqa: F811
+    import shutil
+
+    d = str(tmp_path_factory.mktemp(name) / "index")
+    shutil.copytree(index_dir, d)
+    return d
+
+
+def _rewrite(d, table, fn):
+    """Rewrite every parquet file of one index table in place."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    files = glob.glob(os.path.join(d, table, "bucket=*", "*.parquet"))
+    assert files
+    for f in files:
+        fn(pq.ParquetFile(f).read(), f)
+
+
+def test_lmd_without_dictionary_cf(index_dir, tmp_path_factory):  # noqa: F811
+    """A dictionary without the cf column (pre-cf build) serves LMD
+    from the decoded cf, with the same results as the cf index."""
+    import pyarrow.parquet as pq
+
+    d = _copy_index(index_dir, tmp_path_factory, "nocf")
+    _rewrite(d, "dictionary",
+             lambda t, f: pq.write_table(t.drop_columns(["cf"]), f))
+    ref, nocf = LocalSearcher(index_dir), LocalSearcher(d)
+    assert nocf._dict_lookup("the")[2] is None
+    assert ref._dict_lookup("the")[2] == nocf.term_cf("the")
+    for qterms in (["the", "data"], ["window"], ["spark", "merge"]):
+        for mode in ("and", "or"):
+            want = ref.search_lmd(qterms, k=7, stem=False, mode=mode)
+            assert want
+            assert nocf.search_lmd(qterms, k=7, stem=False, mode=mode) == want
+
+
+def test_terms_spanning_row_groups(index_dir, tmp_path_factory):  # noqa: F811
+    """Postings rewritten at 7 rows per row group, row order kept, so
+    a term's segments span several row groups: its segment columns and
+    every query shape stay bit-identical to the original index."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    d = _copy_index(index_dir, tmp_path_factory, "rg7")
+    _rewrite(d, "postings",
+             lambda t, f: pq.write_table(t, f, row_group_size=7))
+    ref, small = LocalSearcher(index_dir), LocalSearcher(d)
+    assert any(len(rgs) > 1 for rgs in small._rg.values())
+    terms = pq.read_table(os.path.join(index_dir, "dictionary"),
+                          columns=["term"])["term"].to_pylist()
+    for t in ["the"] + sorted(terms)[::25]:
+        a, b = ref._segments(t), small._segments(t)
+        assert len(a) == len(b) > 0
+        for f in a.__slots__:
+            assert np.array_equal(getattr(a, f), getattr(b, f)), (t, f)
+    assert len(small._segments("the")) > 7  # spans row groups
+
+    for qtext in ("the fast", "spark join window", "the fast spark"):
+        for kw in ({"mode": "and"}, {"mode": "or"},
+                   {"mode": "or", "msm": 2}):
+            for prune in (True, False):
+                for fast in (True, False):
+                    o = dict(k=8, stem=False, prune=prune, fast=fast, **kw)
+                    assert small.search(qtext, **o) == ref.search(qtext, **o)
+        doc = ref.search(qtext, k=1, stem=False, mode="or")[0][0]
+        assert small.explain_score(qtext, doc, stem=False) == \
+            ref.explain_score(qtext, doc, stem=False)
+    for qtext in ("spark|window the", "the|fast data"):
+        assert small.search_grouped(qtext, k=8, stem=False) == \
+            ref.search_grouped(qtext, k=8, stem=False)
+    for qterms in (["the", "data"], ["window"]):
+        for mode in ("and", "or"):
+            assert small.search_lmd(qterms, k=8, stem=False, mode=mode) == \
+                ref.search_lmd(qterms, k=8, stem=False, mode=mode)
