@@ -143,7 +143,7 @@ def _stage_a_stats(
     # atomic publish (plans/publish.py): _stage_a_stats also runs
     # against LIVE indexes (extend, compaction) — a concurrent reader
     # must never observe these tables missing or partially written
-    from search_engine_spark.plans.publish import publish_dir
+    from search_engine_spark.plans.publish import publish_dir, write_json
 
     docs = flat.select("doc_id", "doclen").dropDuplicates(["doc_id"])
     publish_dir(
@@ -242,8 +242,7 @@ def _stage_a_stats(
     }
     if stem is not None:
         meta["stem"] = bool(stem)
-    with open(paths.meta, "w") as f:
-        json.dump(meta, f)
+    write_json(paths.meta, meta)
 
 
 def _derive_dictionary(

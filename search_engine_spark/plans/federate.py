@@ -23,9 +23,10 @@ very constants a physical merge would write:
   ``avgdl = float(sum)/float(n)`` — the identical float expression
   ``_merge_core`` writes into the merged stats table, so per-doc
   tfnorm is bit-equal.
-* **df** — a per-term dict-like that sums each sub-dictionary's df
-  (absent -> 0), installed as ``LocalSearcher._idf_df``; with global
-  n_docs this makes idf bit-equal to the merged dictionary's.
+* **df** — a per-term dict-like that sums each sub-index's df
+  (``LocalSearcher._dict_lookup``; absent -> 0), installed as
+  ``LocalSearcher._idf_df``; with global n_docs this makes idf
+  bit-equal to the merged dictionary's.
 * **pruning bounds** — each sub's baked ``max_tfnorm`` bounds were
   computed under its OWN avgdl; serving under the (usually larger)
   global avgdl rescales them by ``max(1, avgdl_global/avgdl_sub)``,

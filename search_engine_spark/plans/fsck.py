@@ -4,11 +4,16 @@ machinery — no Spark job.
 
 Checks (each failure is one entry in the returned ``errors`` list):
 
-  I1 df-consistency — dictionary ``df`` equals the count of DISTINCT
-     decoded doc ids for the term. Tombstones are deliberately NOT
-     applied: df is a build-time constant frozen until compaction
-     (plans/deletes.py contract), so logical deletes must not change
-     this invariant.
+  I1 df/cf-consistency — dictionary ``df`` equals the count of
+     DISTINCT decoded doc ids for the term and the sum of its
+     segments' ``n``; dictionary ``cf`` equals the sum of the decoded
+     tfs and of the segments' ``tf_sum`` (each leg checked where the
+     column exists). Serving (plans/wand.py) takes df/cf from those
+     segment sums, while prefix/wildcard expansion and suggest read
+     the dictionary, so the two must agree.
+     Tombstones are deliberately NOT applied: df/cf are build-time
+     constants frozen until compaction (plans/deletes.py contract),
+     so logical deletes must not change this invariant.
   I2 no duplicate (term, doc_id) postings — the corruption class the
      round-1 extend-offset bug produced (doc-id ranges of two builds
      overlapping after an --extend).
@@ -60,8 +65,9 @@ from search_engine_spark.plans.deletes import load_tombstones
 
 
 def _check_term(term: str, df: int, bucket: int, searcher, errors: list,
-                n_buckets: int) -> np.ndarray:
-    """Run I1-I4 + I6(doclen) for one term; returns decoded doc ids."""
+                n_buckets: int, cf: int | None = None) -> np.ndarray:
+    """Run I1-I4 + I6(doclen) for one term; returns decoded doc ids.
+    cf is the dictionary cf (None: a pre-cf dictionary)."""
     if term_bucket(term, n_buckets) != bucket:
         errors.append(
             f"I4 bucket routing: term {term!r} stored in bucket {bucket} "
@@ -69,6 +75,7 @@ def _check_term(term: str, df: int, bucket: int, searcher, errors: list,
         )
     segs = searcher._segments(term)
     all_docs = []
+    tf_total = 0
     prev_salt = prev_last = None
     # each salt's segments in seg order, salts ascending
     for r in np.lexsort((segs.seg, segs.salt)).tolist():
@@ -94,6 +101,7 @@ def _check_term(term: str, df: int, bucket: int, searcher, errors: list,
             )
         if len(docs):
             prev_last = int(docs[-1])
+        tf_total += int(np.sum(tfs, dtype=np.int64))
         if np.any(dls <= 0):
             errors.append(
                 f"I6 doclen: {term!r} salt={salt} seg={seg} "
@@ -111,6 +119,22 @@ def _check_term(term: str, df: int, bucket: int, searcher, errors: list,
         errors.append(
             f"I1 df: {term!r} dictionary df={df} but postings hold "
             f"{uniq.size} distinct docs"
+        )
+    n_total = int(segs.n.sum())
+    if n_total != df:
+        errors.append(
+            f"I1 df: {term!r} dictionary df={df} but its segments' n "
+            f"sums to {n_total}"
+        )
+    if cf is not None and cf != tf_total:
+        errors.append(
+            f"I1 cf: {term!r} dictionary cf={cf} but postings hold "
+            f"tf sum {tf_total}"
+        )
+    if segs.tf_sum is not None and int(segs.tf_sum.sum()) != tf_total:
+        errors.append(
+            f"I1 cf: {term!r} segments' tf_sum sums to "
+            f"{int(segs.tf_sum.sum())} but postings hold tf sum {tf_total}"
         )
     return docs
 
@@ -471,9 +495,11 @@ def fsck(index_dir: str, *, sample_terms: int = 200, seed: int = 7) -> dict:
     if not searcher.avgdl > 0:
         errors.append(f"I6 stats: avgdl={searcher.avgdl}")
 
+    dic_path = os.path.join(index_dir, "dictionary")
+    has_cf = "cf" in pq.ParquetDataset(dic_path).schema.names
     dic = pq.read_table(
-        os.path.join(index_dir, "dictionary"),
-        columns=["term", "df", "bucket"],
+        dic_path,
+        columns=["term", "df", "bucket"] + (["cf"] if has_cf else []),
     ).to_pandas()
     head = dic.nlargest(min(10, len(dic)), "df")
     rng = np.random.default_rng(seed)
@@ -484,8 +510,10 @@ def fsck(index_dir: str, *, sample_terms: int = 200, seed: int = 7) -> dict:
 
     picked = pd.concat([head, sample])
     for row in picked.itertuples(index=False):
+        cf = row.cf if has_cf and not pd.isna(row.cf) else None
         _check_term(row.term, int(row.df), int(row.bucket), searcher,
-                    errors, searcher.n_buckets)
+                    errors, searcher.n_buckets,
+                    None if cf is None else int(cf))
 
     urlmap_path = os.path.join(index_dir, "urlmap")
     tombs = load_tombstones(index_dir)

@@ -75,7 +75,7 @@ from search_engine_spark.plans.build_index import (
     _stage_b,
 )
 from search_engine_spark.plans.manifest import Manifest
-from search_engine_spark.plans.publish import publish_dir
+from search_engine_spark.plans.publish import publish_dir, write_json
 
 _SEG_ORDER = [
     "bucket", "term", "salt", "seg", "n", "doc_ids",
@@ -387,8 +387,7 @@ def _merge_core(
         meta["stem"] = bool(mt["stem"])
     if scale != 1.0:
         meta["tfnorm_scale"] = scale
-    with open(pt.meta, "w") as f:
-        json.dump(meta, f)
+    write_json(pt.meta, meta)
 
     # 6. hot-term sketch from the merged dictionary
     hot = (

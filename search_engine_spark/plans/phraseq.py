@@ -229,6 +229,10 @@ def search_mixed(
             f"positional table analyzer (stem={phraser.stem}) does not "
             f"match the query analysis (stem={stem})"
         )
+    searcher._first_contact([
+        *(t for toks, _, neg, _ in phrases if not neg for t in toks),
+        *(t for g in groups for t in g), *excl_terms,
+    ])
 
     # Clause evaluation order (round 5 — mixed_p50 tightening):
     # score-bearing positive phrases go FIRST, rarest-token first

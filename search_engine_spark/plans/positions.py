@@ -640,11 +640,13 @@ class PhraseSearcher:
         for path, rgs, pure in runs:
             if pure:
                 sel = self._files[path].read_row_groups(
-                    rgs, columns=["doc_id", "npos", "positions"]
+                    rgs, columns=["doc_id", "npos", "positions"],
+                    use_threads=False,
                 )
             else:
                 tbl = self._files[path].read_row_groups(
-                    rgs, columns=["term", "doc_id", "npos", "positions"]
+                    rgs, columns=["term", "doc_id", "npos", "positions"],
+                    use_threads=False,
                 )
                 sel = tbl.filter(pc.equal(tbl["term"], term))
             if sel.num_rows:

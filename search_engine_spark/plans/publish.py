@@ -186,3 +186,24 @@ def publish_dir(path: str, write_fn, *, suffix: str = ".publish") -> None:
     else:
         shutil.rmtree(path)
         os.rename(tmp, path)
+
+
+def write_json(path: str, obj) -> None:
+    """Replace the JSON file at ``path`` atomically: dump to a temp
+    file in the same directory, then ``os.replace`` it into place, so
+    a reader opening ``path`` meanwhile sees the old contents or the
+    new ones, never a truncated file. A failed dump leaves ``path``
+    untouched and removes the temp file."""
+    import json
+    import uuid
+
+    head, base = os.path.split(path)
+    tmp = os.path.join(head, f".{base}.{uuid.uuid4().hex}.tmp")
+    try:
+        with open(tmp, "w") as f:
+            json.dump(obj, f)
+        os.replace(tmp, path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise

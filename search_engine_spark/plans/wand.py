@@ -2,11 +2,14 @@
 index in-process (SURVEY.md section 3.2, M4).
 
 This path crosses NO process boundary — a thin pyarrow reader opens
-only the parquet row groups of the query's (bucket, term) keys, keeps
-the term's rows with an Arrow filter, holds its segments as numpy
-columns (_Segs) and evaluates entirely in numpy; no pandas object is
-built per term. That is what makes millisecond p50 feasible; a Spark
-job pays a ~100ms+ scheduling floor (the distributed IndexReader path
+only the postings row groups of the query's (bucket, term) keys, once
+per query for all its first-contact terms (_segments_many), keeps
+each term's rows with an Arrow filter, holds its segments as numpy
+columns (_Segs), takes df/cf from their n/tf_sum sums and evaluates
+entirely in numpy; no pandas object is built per term and no
+dictionary row group is read. That is what makes millisecond p50
+feasible; a Spark job pays a ~100ms+ scheduling floor (the
+distributed IndexReader path
 remains the correctness/batch path and must return identical results
 — property-tested).
 
@@ -117,10 +120,12 @@ class _Segs:
     """One term's segments as columns, in (file, row group) order:
     numpy metadata — max_tfnorm as float64 with the index's tfnorm
     scale applied — and per-segment blobs as object arrays. Callers
-    select segments by index arrays (LocalSearcher._decode rows)."""
+    select segments by index arrays (LocalSearcher._decode rows).
+    tf_sum (per-segment Σ tf) is None when any of the term's files
+    lacks the column or holds a null there (pre-tf_sum segments)."""
 
     __slots__ = ("first_doc", "last_doc", "salt", "seg", "n",
-                 "max_tfnorm", "doc_ids", "tfs", "doclens")
+                 "max_tfnorm", "doc_ids", "tfs", "doclens", "tf_sum")
 
     def __init__(self, tbl: pa.Table, tfnorm_scale: float):
         for f in ("first_doc", "last_doc", "salt", "seg", "n"):
@@ -131,18 +136,19 @@ class _Segs:
         if tfnorm_scale != 1.0:
             m = m * tfnorm_scale
         self.max_tfnorm = m.astype(np.float64)
+        ts = tbl["tf_sum"] if "tf_sum" in tbl.column_names else None
+        self.tf_sum = None if ts is None or ts.null_count else ts.to_numpy()
 
     def __len__(self) -> int:
         return self.first_doc.size
 
 
-class _LazyTermMap:
-    """Mapping view over the lazy dictionary: `term in m` / `m[term]`
-    without materializing the vocabulary (field = 'df' or 'bucket')."""
+class _LazyDF:
+    """Mapping view term -> df over the lazy dictionary: `term in m` /
+    `m[term]` without materializing the vocabulary."""
 
-    def __init__(self, searcher: "LocalSearcher", field: str):
+    def __init__(self, searcher: "LocalSearcher"):
         self._s = searcher
-        self._i = 0 if field == "df" else 1
 
     def __contains__(self, term: str) -> bool:
         return self._s._dict_lookup(term) is not None
@@ -151,7 +157,7 @@ class _LazyTermMap:
         row = self._s._dict_lookup(term)
         if row is None:
             raise KeyError(term)
-        return row[self._i]
+        return row[0]
 
 
 class LocalSearcher:
@@ -159,15 +165,19 @@ class LocalSearcher:
 
     Open cost is O(parquet footers): stats + collection constants plus
     a per-row-group (min, max) index over dictionary AND postings
-    files. The vocabulary itself is NEVER materialized — a term's
-    dictionary row (df and cf in one read) is found by hashing to its
-    bucket locally (functions.hashing, JVM-bit-equal) and reading only
-    the row groups whose term range admits it, LRU-cached. A term's
-    postings row groups are read the same way, filtered to the term's
-    rows in Arrow, and held as columns (_Segs), LRU-cached per term.
-    Memory is therefore bounded by the caches, not the vocabulary size
-    (a 10^8-term dictionary would otherwise be tens of GB of Python
-    dicts on a serving node).
+    files. The vocabulary itself is NEVER materialized. A query reads
+    only postings: a term is hashed to its bucket locally
+    (functions.hashing, JVM-bit-equal), and the row groups whose term
+    range admits it are read — each admitted row group once per query
+    for all its first-contact terms (_segments_many), single-threaded
+    — filtered to each term's rows in Arrow, and held as columns
+    (_Segs), LRU-cached per term. df and cf are the sums of the
+    segments' n and tf_sum (the build derives the dictionary's df/cf
+    the same way; fsck I1), LRU-cached per term with misses, so served
+    queries never read the dictionary; prefix_terms, vocab_terms and
+    the pre-meta eager path do. Memory is therefore bounded by the
+    caches, not the vocabulary size (a 10^8-term dictionary would
+    otherwise be tens of GB of Python dicts on a serving node).
     """
 
     _COLUMNS = ["term", "seg", "salt", "n", "doc_ids", "tfs", "doclens",
@@ -273,8 +283,7 @@ class LocalSearcher:
                     hi = stats.max if stats is not None else None
                     self._dict_rg.setdefault(bucket, []).append((path, rg, lo, hi))
         self._dict_cache: dict[str, tuple[int, int, int | None] | None] = {}
-        self._df = _LazyTermMap(self, "df")
-        self._bucket = _LazyTermMap(self, "bucket")
+        self._df = _LazyDF(self)
         self._dataset = ds.dataset(
             os.path.join(index_dir, "postings"), format="parquet",
             partitioning="hive",
@@ -287,11 +296,14 @@ class LocalSearcher:
         # (term, doc_id), so ranges are tight.
         self._rg: dict[int, list[tuple[str, int, str, str]]] = {}
         self._files: dict[str, pq.ParquetFile] = {}
+        self._cols: dict[str, list[str]] = {}  # per file: columns read
         for frag in self._dataset.get_fragments():
             path = frag.path
             bucket = int(path.split("bucket=")[1].split("/")[0])
             pf = pq.ParquetFile(path)
             self._files[path] = pf
+            self._cols[path] = self._COLUMNS + (
+                ["tf_sum"] if "tf_sum" in pf.schema_arrow.names else [])
             term_idx = pf.schema_arrow.get_field_index("term")
             md = pf.metadata
             for rg in range(md.num_row_groups):
@@ -533,12 +545,13 @@ class LocalSearcher:
 
         Block-max needs per-segment LMD bounds, derived from the baked
         BM25 max_tfnorm impacts (_lmd_seg_bounds), and p_t from the
-        dictionary cf (bit-equal to the decoded sum on a tombstone-free
-        index; fsck invariant) or the federated _lmd_cf override.
-        Wherever the dictionary cf may differ from the decoded masked
-        cf (live tombstones without an override, pre-meta or pre-cf
-        dictionaries, missing docs footer stats), p_t comes from the
-        decoded postings and the scatter runs over them.
+        segments' Σ tf_sum cf (bit-equal to the decoded sum on a
+        tombstone-free index; fsck invariant I1) or the federated
+        _lmd_cf override. Wherever that cf may differ from the decoded
+        masked cf (live tombstones without an override, the pre-meta
+        index, pre-tf_sum segments, missing docs footer stats), p_t
+        comes from the decoded postings and the scatter runs over
+        them.
 
         exclude / restrict carry the standard NOT-term and
         filter-clause semantics (removal-only, applied before
@@ -553,6 +566,7 @@ class LocalSearcher:
             qterms = list(dict.fromkeys(qtext_or_terms))
         if isinstance(exclude, str):
             exclude = analyze_query(exclude, stem=stem)
+        self._first_contact([*qterms, *(exclude or ())])
         if mode == "and" and any(t not in self._df for t in qterms):
             return []
         qterms = [t for t in qterms if t in self._df]
@@ -683,6 +697,8 @@ class LocalSearcher:
             exclude = analyze_query(exclude, stem=stem)
         if after is not None:
             after = (int(after[0]), float(after[1]))
+        self._first_contact([*(t for g in groups for t in g),
+                             *(exclude or ())])
         groups = [[t for t in g if t in self._df] for g in groups]
         if not groups or any(not g for g in groups):
             return []  # empty query, or an unsatisfiable group
@@ -831,6 +847,7 @@ class LocalSearcher:
         # full (non-deduplicated) term vector — analyze_query would
         # collapse repeats and flatten every tf to 1
         tf = Counter(analyze(text, stem=stem))
+        self._first_contact(tf)
         scored = sorted(
             (-round(n * self._idf(t), 6), t)
             for t, n in tf.items()
@@ -841,10 +858,11 @@ class LocalSearcher:
         return [(d, s) for d, s in hits if d != int(doc_id)][:k]
 
     def _dict_lookup(self, term: str) -> tuple[int, int, int | None] | None:
-        """(df, bucket, cf) for term, or None if absent — one
-        row-group-pruned dictionary read, LRU-cached (misses cached
-        too: absent query terms are common and must stay cheap). cf is
-        None on a pre-cf dictionary (and on the eager path)."""
+        """(df, bucket, cf) for term, or None if absent: df = Σ n and
+        cf = Σ tf_sum over the term's segments — the sums the build
+        writes into the dictionary — LRU-cached (misses cached too:
+        absent query terms are common and must stay cheap). cf is None
+        when the segments predate tf_sum (and on the eager path)."""
         if self._eager:
             df = self._eager_df.get(term)
             return (None if df is None
@@ -854,28 +872,30 @@ class LocalSearcher:
             val = cache.pop(term)
             cache[term] = val  # refresh recency
             return val
+        segs = self._segments(term)  # a read records the row itself
+        return cache[term] if term in cache else self._note_stats(term, segs)
+
+    def _note_stats(self, term: str, segs: _Segs):
+        """Cache and return term's (df, bucket, cf) row from its segments."""
         from search_engine_spark.functions.hashing import term_bucket
 
-        b = term_bucket(term, self.n_buckets)
-        row = None
-        for path, rg, lo, hi in self._dict_rg.get(b, ()):
-            if (lo is None or lo <= term) and (hi is None or term <= hi):
-                pf = self._dict_files[path]
-                has_cf = "cf" in pf.schema_arrow.names
-                tbl = pf.read_row_groups(
-                    [rg], columns=["term", "df", "cf"] if has_cf
-                    else ["term", "df"]
-                )
-                sel = tbl.filter(pc.equal(tbl["term"], term))
-                if sel.num_rows:
-                    cf = sel["cf"][0].as_py() if has_cf else None
-                    row = (int(sel["df"][0].as_py()), b,
-                           None if cf is None else int(cf))
-                    break
+        row = None if len(segs) == 0 else (
+            int(segs.n.sum()), term_bucket(term, self.n_buckets),
+            None if segs.tf_sum is None else int(segs.tf_sum.sum()),
+        )
+        cache = self._dict_cache
+        cache.pop(term, None)
         if len(cache) >= self._DICT_CACHE:
             cache.pop(next(iter(cache)))
         cache[term] = row
         return row
+
+    def _first_contact(self, terms) -> None:
+        """One batched postings read for the terms whose df/cf are not
+        cached yet, before a query's first df check."""
+        if not self._eager:
+            self._segments_many(
+                [t for t in terms if t not in self._dict_cache])
 
     def _idf(self, term: str) -> float:
         # _idf_df (plans/federate): dict-like override giving the
@@ -896,27 +916,63 @@ class LocalSearcher:
         return v
 
     def _segments(self, term: str) -> _Segs:
-        """All segments of a term (metadata + blobs) as columns, read
-        from exactly the row groups whose stats admit the term and
-        filtered to the term's rows in Arrow before any conversion;
-        LRU-cached per term for the serving hot set."""
+        """All segments of a term as columns (see _segments_many)."""
         hit = self._lru_hit(self._term_cache, term)
-        if hit is not None:
-            return hit
-        parts = []
-        for path, rg, lo, hi in self._rg.get(self._bucket[term], ()):
-            if (lo is None or lo <= term) and (hi is None or term <= hi):
-                tbl = self._files[path].read_row_groups([rg], columns=self._COLUMNS)
-                parts.append(tbl.filter(pc.equal(tbl["term"], term)))
-        out = _Segs(
-            pa.concat_tables(parts) if parts
-            else self._dataset.schema.empty_table(),
-            self._tfnorm_scale,
-        )
-        if len(self._term_cache) >= self._cache_terms:
-            self._term_cache.pop(next(iter(self._term_cache)))
-        self._term_cache[term] = out
+        return hit if hit is not None else self._segments_many((term,))[term]
+
+    def _segments_many(self, terms) -> dict[str, _Segs]:
+        """term -> all its segments (metadata + blobs) as columns.
+        Uncached terms are grouped by the row groups whose stats admit
+        them; each such row group is read once, single-threaded (a
+        serving read is one small row group, where pyarrow's thread
+        pool costs more than it saves), and filtered to each term's
+        rows in Arrow in (file, row group) order. Read terms also
+        record their (df, bucket, cf) row; a term known absent is not
+        read. LRU-cached per term for the serving hot set."""
+        from search_engine_spark.functions.hashing import term_bucket
+
+        out: dict[str, _Segs] = {}
+        want: dict[str, list[tuple[str, int]]] = {}
+        for t in dict.fromkeys(terms):
+            hit = self._lru_hit(self._term_cache, t)
+            if hit is not None:
+                out[t] = hit
+            elif self._eager:
+                b = self._eager_bucket.get(t)
+                want[t] = [] if b is None else self._admitted(t, b)
+            elif self._dict_cache.get(t, 0) is None:  # known absent
+                want[t] = []
+            else:
+                want[t] = self._admitted(t, term_bucket(t, self.n_buckets))
+        tables = {}
+        for t, rgs in want.items():
+            parts = []
+            for path, rg in rgs:
+                tbl = tables.get((path, rg))
+                if tbl is None:
+                    tbl = tables[path, rg] = self._files[path].read_row_groups(
+                        [rg], columns=self._cols[path], use_threads=False)
+                parts.append(tbl.filter(pc.equal(tbl["term"], t)))
+            if any(p.num_columns != parts[0].num_columns for p in parts):
+                parts = [p.select(self._COLUMNS) for p in parts]
+            segs = out[t] = _Segs(
+                pa.concat_tables(parts) if parts
+                else self._dataset.schema.empty_table(),
+                self._tfnorm_scale,
+            )
+            if not self._eager:
+                self._note_stats(t, segs)
+            if len(segs):
+                if len(self._term_cache) >= self._cache_terms:
+                    self._term_cache.pop(next(iter(self._term_cache)))
+                self._term_cache[t] = segs
         return out
+
+    def _admitted(self, term: str, bucket: int) -> list[tuple[str, int]]:
+        """(file, row group) pairs of `bucket` whose term range admits
+        `term`, in file and row-group order."""
+        return [(path, rg) for path, rg, lo, hi in self._rg.get(bucket, ())
+                if (lo is None or lo <= term) and (hi is None or term <= hi)]
 
     def _tfnorm(self, tf: np.ndarray, dl: np.ndarray) -> np.ndarray:
         tff = tf.astype(np.float64)
@@ -1024,8 +1080,10 @@ class LocalSearcher:
         containing an excluded term anywhere must be suppressed — so
         they ride the same query-independent decoded cache the
         positive terms use. Unknown terms are no-ops."""
+        exclude = list(dict.fromkeys(exclude or []))
+        self._first_contact(exclude)
         arrs = []
-        for t in dict.fromkeys(exclude or []):
+        for t in exclude:
             if t in self._df:
                 arrs.append(self._load_full(t, self._idf(t))[0])
         if not arrs:
@@ -1144,6 +1202,7 @@ class LocalSearcher:
             qterms = list(dict.fromkeys(qtext_or_terms))
         if isinstance(exclude, str):
             exclude = analyze_query(exclude, stem=stem)
+        self._first_contact([*qterms, *(exclude or ())])
         excl = self._excluded_docs(exclude) if exclude else None
         excl = self._merge_excl(excl, exclude_docs)
         allow = self._norm_restrict(restrict)
@@ -1301,7 +1360,8 @@ class LocalSearcher:
                   after=None):
         """Block-max executor (see module docstring). Returns
         (hits, segments skipped)."""
-        segs = [self._segments(t) for t in q.terms]
+        by_term = self._segments_many(q.terms)
+        segs = [by_term[t] for t in q.terms]
 
         def bound(j):
             m = segs[j].max_tfnorm

@@ -18,6 +18,7 @@ from search_engine_spark.plans.publish import (
     begin_generation,
     is_generationed,
     resolve_root,
+    write_json,
 )
 from search_engine_spark.plans.wand import LocalSearcher
 
@@ -251,3 +252,26 @@ def test_fold_generationed(spark, documents, idx, tmp_path):
     assert LocalSearcher(idx).n_docs > reader.n_docs
     # consumed epochs are gone (post-commit)
     assert not os.path.isdir(os.path.join(staging, "epoch=0"))
+
+
+def test_meta_write_is_atomic(tmp_path, monkeypatch):
+    """index_meta.json is replaced, never truncated in place: a dump
+    that fails midway leaves the previous file intact and readable,
+    and no temp file behind."""
+    path = str(tmp_path / "index_meta.json")
+    write_json(path, {"n_buckets": 4, "n_docs": 10})
+
+    def torn_dump(obj, f):
+        f.write('{"n_buckets": 8, "n_d')
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="disk full"):
+        write_json(path, {"n_buckets": 8, "n_docs": 20})
+    monkeypatch.undo()
+    with open(path) as f:
+        assert json.load(f) == {"n_buckets": 4, "n_docs": 10}
+    assert os.listdir(tmp_path) == ["index_meta.json"]
+    write_json(path, {"n_buckets": 8})
+    with open(path) as f:
+        assert json.load(f) == {"n_buckets": 8}

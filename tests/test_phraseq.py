@@ -456,3 +456,17 @@ def test_fuzzy_clause_without_table_is_usage_error(plain_dir, tmp_path):
     )
     assert r.returncode == 2
     assert "build-suggest" in r.stderr
+
+
+def test_mixed_reads_no_dictionary(accel_dir, plain_dir):
+    """search_mixed takes every df from the postings: with the
+    dictionary files unreadable it returns the untouched searcher's
+    results."""
+    from tests.test_wand import _forbid_dictionary_reads
+
+    for d in (accel_dir, plain_dir):
+        s = _forbid_dictionary_reads(LocalSearcher(d))
+        ref, ph = LocalSearcher(d), PhraseSearcher(d)
+        for qtext in MIXED_QUERIES:
+            assert search_mixed(s, ph, qtext, k=20, stem=False) == \
+                search_mixed(ref, ph, qtext, k=20, stem=False), qtext

@@ -291,21 +291,33 @@ def _rewrite(d, table, fn):
 
 
 def test_lmd_without_dictionary_cf(index_dir, tmp_path_factory):  # noqa: F811
-    """A dictionary without the cf column (pre-cf build) serves LMD
-    from the decoded cf, with the same results as the cf index."""
+    """Serving takes cf from the postings' tf_sum, so a dictionary
+    without the cf column (pre-cf build) changes nothing; postings
+    without tf_sum (pre-tf_sum segments) give cf None and LMD takes
+    the decoded cf — both with the cf index's results."""
     import pyarrow.parquet as pq
 
     d = _copy_index(index_dir, tmp_path_factory, "nocf")
     _rewrite(d, "dictionary",
              lambda t, f: pq.write_table(t.drop_columns(["cf"]), f))
-    ref, nocf = LocalSearcher(index_dir), LocalSearcher(d)
-    assert nocf._dict_lookup("the")[2] is None
-    assert ref._dict_lookup("the")[2] == nocf.term_cf("the")
+    e = _copy_index(index_dir, tmp_path_factory, "notfsum")
+    _rewrite(e, "postings",
+             lambda t, f: pq.write_table(t.drop_columns(["tf_sum"]), f))
+    ref, nocf, notfs = (LocalSearcher(index_dir), LocalSearcher(d),
+                        LocalSearcher(e))
+    for t in ("the", "data", "window"):
+        assert nocf._dict_lookup(t) == ref._dict_lookup(t)
+        assert nocf._dict_lookup(t)[2] == \
+            int(nocf._segments(t).tf_sum.sum()) == nocf.term_cf(t)
+        assert notfs._segments(t).tf_sum is None
+        assert notfs._dict_lookup(t)[2] is None
+        assert notfs._dict_lookup(t)[:2] == ref._dict_lookup(t)[:2]
     for qterms in (["the", "data"], ["window"], ["spark", "merge"]):
         for mode in ("and", "or"):
             want = ref.search_lmd(qterms, k=7, stem=False, mode=mode)
             assert want
             assert nocf.search_lmd(qterms, k=7, stem=False, mode=mode) == want
+            assert notfs.search_lmd(qterms, k=7, stem=False, mode=mode) == want
 
 
 def test_terms_spanning_row_groups(index_dir, tmp_path_factory):  # noqa: F811
@@ -347,3 +359,159 @@ def test_terms_spanning_row_groups(index_dir, tmp_path_factory):  # noqa: F811
         for mode in ("and", "or"):
             assert small.search_lmd(qterms, k=8, stem=False, mode=mode) == \
                 ref.search_lmd(qterms, k=8, stem=False, mode=mode)
+
+
+def _dictionary(index_dir):  # noqa: F811
+    import os
+
+    import pyarrow.parquet as pq
+
+    return pq.read_table(os.path.join(index_dir, "dictionary"),
+                         columns=["term", "df", "bucket", "cf"]).to_pylist()
+
+
+def test_dict_lookup_matches_dictionary(index_dir):  # noqa: F811
+    """df/cf served from the segments equal the dictionary table's
+    row for every term, whether the term arrives in a batch or
+    alone; an absent term is None."""
+    rows = _dictionary(index_dir)
+    want = {r["term"]: (r["df"], r["bucket"], r["cf"]) for r in rows}
+    batch, single = LocalSearcher(index_dir), LocalSearcher(index_dir)
+    batch._first_contact(list(want))
+    for t, row in want.items():
+        assert batch._dict_lookup(t) == row, t
+    for t in sorted(want)[::7]:
+        assert single._dict_lookup(t) == want[t], t
+    assert batch._dict_lookup("qqqzzz") is None
+    assert single._dict_lookup("qqqzzz") is None
+
+
+@pytest.mark.parametrize("layout", ["as_built", "rg7"])
+def test_segments_many_equals_segments(index_dir, tmp_path_factory,  # noqa: F811
+                                       layout):
+    """One batched read per row group builds each term's segments
+    column for column as the per-term reader does: terms sharing a
+    row group, terms of other buckets, absent terms, and terms
+    spanning row groups (postings rewritten at 7 rows per group)."""
+    import pyarrow.parquet as pq
+
+    d = index_dir
+    if layout == "rg7":
+        d = _copy_index(index_dir, tmp_path_factory, "many_rg7")
+        _rewrite(d, "postings",
+                 lambda t, f: pq.write_table(t, f, row_group_size=7))
+    absent = {"qqqzzz", "zzzqqq"}
+    by_bucket = {}
+    for r in _dictionary(index_dir):
+        by_bucket.setdefault(r["bucket"], []).append(r["term"])
+    b0, b1 = sorted(by_bucket)[:2]
+    terms = (sorted(by_bucket[b0])[:5] + sorted(by_bucket[b1])[::9]
+             + ["the", *sorted(absent)])
+    many = LocalSearcher(d)._segments_many(terms)
+    one = LocalSearcher(d)
+    assert list(many) == terms
+    for t in terms:
+        a, b = many[t], one._segments(t)
+        assert len(a) == len(b) and (len(a) == 0) == (t in absent), t
+        for f in a.__slots__:
+            assert np.array_equal(getattr(a, f), getattr(b, f)), (t, f)
+
+
+class _NoReads:
+    """Stands in for a dictionary ParquetFile a served query must not
+    touch."""
+
+    def __getattr__(self, name):
+        raise AssertionError(f"dictionary {name}() on a served query")
+
+
+def _forbid_dictionary_reads(s: LocalSearcher) -> LocalSearcher:
+    for path in s._dict_files:
+        s._dict_files[path] = _NoReads()
+    return s
+
+
+def test_served_queries_read_no_dictionary(index_dir):  # noqa: F811
+    """search (and/or/msm), search_grouped and search_lmd never read
+    the dictionary, and return what an untouched searcher returns."""
+    ref = LocalSearcher(index_dir)
+    s = _forbid_dictionary_reads(LocalSearcher(index_dir))
+    for qtext in ("the fast", "spark join window", "the fast spark",
+                  "window qqqzzz"):
+        for kw in ({"mode": "and"}, {"mode": "or"},
+                   {"mode": "or", "msm": 2}):
+            o = dict(k=8, stem=False, **kw)
+            assert s.search(qtext, **o) == ref.search(qtext, **o)
+            assert s.search(qtext, exclude="data", **o) == \
+                ref.search(qtext, exclude="data", **o)
+        for mode in ("and", "or"):
+            assert s.search_lmd(qtext, k=8, stem=False, mode=mode) == \
+                ref.search_lmd(qtext, k=8, stem=False, mode=mode)
+    for qtext in ("spark|window the", "the|fast data -join"):
+        assert s.search_grouped(qtext, k=8, stem=False) == \
+            ref.search_grouped(qtext, k=8, stem=False)
+    with pytest.raises(AssertionError, match="dictionary"):
+        s.prefix_terms("th")  # the dictionary scans still read it
+
+
+def test_first_contact_reads_each_row_group_once(index_dir):  # noqa: F811
+    """A query whose first-contact terms share one postings row group
+    reads that row group exactly once — no dictionary read, no
+    per-term re-read."""
+    s = LocalSearcher(index_dir)
+    _forbid_dictionary_reads(s)
+    reads = []
+
+    class _Counted:
+        def __init__(self, pf):
+            self._pf = pf
+
+        def read_row_groups(self, *a, **kw):
+            reads.append(a[0])
+            return self._pf.read_row_groups(*a, **kw)
+
+    s._files = {p: _Counted(pf) for p, pf in s._files.items()}
+    by_rgs = {}
+    for r in _dictionary(index_dir):
+        rgs = tuple(s._admitted(r["term"], r["bucket"]))
+        if len(rgs) == 1:
+            by_rgs.setdefault(rgs, []).append(r["term"])
+    shared = max(by_rgs.values(), key=len)
+    assert len(shared) >= 3
+    for call in (lambda q: s.search(q, k=5, stem=False, mode="or"),
+                 lambda q: s.search_lmd(q, k=5, stem=False, mode="or"),
+                 lambda q: s.search_grouped(
+                     [q.split()[:1], q.split()[1:]], k=5, stem=False)):
+        s._term_cache.clear()
+        s._dict_cache.clear()
+        reads.clear()
+        assert call(" ".join(shared[:3]))
+        assert len(reads) == 1, reads
+
+
+def test_fsck_checks_dictionary_cf(index_dir, tmp_path_factory):  # noqa: F811
+    """fsck I1 covers cf: a dictionary cf one above the postings' tf
+    sum is reported, naming the term."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from search_engine_spark.plans.fsck import fsck
+
+    d = _copy_index(index_dir, tmp_path_factory, "cfdrift")
+    victim = []
+
+    def bump(t, f):
+        if not victim:
+            cf = t["cf"].to_pylist()
+            cf[0] += 1
+            victim.append(t["term"][0].as_py())
+            t = t.set_column(t.schema.get_field_index("cf"), "cf",
+                             pa.array(cf, type=t["cf"].type))
+        pq.write_table(t, f)
+
+    _rewrite(d, "dictionary", bump)
+    out = fsck(d, sample_terms=10**6)
+    assert not out["ok"]
+    cf_errors = [e for e in out["errors"] if e.startswith("I1 cf")]
+    assert len(cf_errors) == 1 and repr(victim[0]) in cf_errors[0], \
+        out["errors"][:5]
