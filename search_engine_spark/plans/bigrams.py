@@ -238,13 +238,11 @@ class BigramReader:
         for path, rgs, pure in runs:
             if pure:
                 sel = self._files[path].read_row_groups(
-                    rgs, columns=["doc_id", "tf"],
-                    use_threads=False,
+                    rgs, columns=["doc_id", "tf"]
                 )
             else:
                 tbl = self._files[path].read_row_groups(
-                    rgs, columns=["term", "doc_id", "tf"],
-                    use_threads=False,
+                    rgs, columns=["term", "doc_id", "tf"]
                 )
                 sel = tbl.filter(pc.equal(tbl["term"], term))
             if sel.num_rows:

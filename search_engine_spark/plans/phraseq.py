@@ -229,10 +229,12 @@ def search_mixed(
             f"positional table analyzer (stem={phraser.stem}) does not "
             f"match the query analysis (stem={stem})"
         )
-    searcher._first_contact([
-        *(t for toks, _, neg, _ in phrases if not neg for t in toks),
-        *(t for g in groups for t in g), *excl_terms,
-    ])
+    # boolean terms are scored; phrase tokens only order the clauses
+    searcher.prefetch([*(t for g in groups for t in g), *excl_terms])
+    searcher.prefetch(
+        (t for toks, _, neg, _ in phrases if not neg for t in toks),
+        scored=False,
+    )
 
     # Clause evaluation order (round 5 — mixed_p50 tightening):
     # score-bearing positive phrases go FIRST, rarest-token first

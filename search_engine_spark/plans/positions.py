@@ -640,13 +640,11 @@ class PhraseSearcher:
         for path, rgs, pure in runs:
             if pure:
                 sel = self._files[path].read_row_groups(
-                    rgs, columns=["doc_id", "npos", "positions"],
-                    use_threads=False,
+                    rgs, columns=["doc_id", "npos", "positions"]
                 )
             else:
                 tbl = self._files[path].read_row_groups(
-                    rgs, columns=["term", "doc_id", "npos", "positions"],
-                    use_threads=False,
+                    rgs, columns=["term", "doc_id", "npos", "positions"]
                 )
                 sel = tbl.filter(pc.equal(tbl["term"], term))
             if sel.num_rows:

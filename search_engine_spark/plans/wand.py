@@ -3,13 +3,12 @@ index in-process (SURVEY.md section 3.2, M4).
 
 This path crosses NO process boundary — a thin pyarrow reader opens
 only the postings row groups of the query's (bucket, term) keys, once
-per query for all its first-contact terms (_segments_many), keeps
-each term's rows with an Arrow filter, holds its segments as numpy
-columns (_Segs), takes df/cf from their n/tf_sum sums and evaluates
-entirely in numpy; no pandas object is built per term and no
-dictionary row group is read. That is what makes millisecond p50
-feasible; a Spark job pays a ~100ms+ scheduling floor (the
-distributed IndexReader path
+per query for all its first-contact terms (prefetch), keeps each
+term's rows with an Arrow filter, holds its segments as numpy columns
+(_Segs), takes df/cf from their n/tf_sum sums and evaluates entirely
+in numpy; no pandas object is built per term and no dictionary row
+group is read. That is what makes millisecond p50 feasible; a Spark
+job pays a ~100ms+ scheduling floor (the distributed IndexReader path
 remains the correctness/batch path and must return identical results
 — property-tested).
 
@@ -66,6 +65,7 @@ import pyarrow.parquet as pq
 
 from search_engine_spark import B, K1
 from search_engine_spark.functions.codec import decode_postings, decode_varints
+from search_engine_spark.functions.hashing import term_bucket
 from search_engine_spark.plans.deletes import load_tombstones, mask_deleted
 from search_engine_spark.plans.scoring import analyze_query
 
@@ -169,15 +169,16 @@ class LocalSearcher:
     only postings: a term is hashed to its bucket locally
     (functions.hashing, JVM-bit-equal), and the row groups whose term
     range admits it are read — each admitted row group once per query
-    for all its first-contact terms (_segments_many), single-threaded
-    — filtered to each term's rows in Arrow, and held as columns
-    (_Segs), LRU-cached per term. df and cf are the sums of the
-    segments' n and tf_sum (the build derives the dictionary's df/cf
-    the same way; fsck I1), LRU-cached per term with misses, so served
-    queries never read the dictionary; prefix_terms, vocab_terms and
-    the pre-meta eager path do. Memory is therefore bounded by the
-    caches, not the vocabulary size (a 10^8-term dictionary would
-    otherwise be tens of GB of Python dicts on a serving node).
+    for all its first-contact terms (prefetch) — filtered to each
+    term's rows in Arrow, and held as columns (_Segs), LRU-cached per
+    term. df and cf are the sums of the segments' n and tf_sum (the
+    build derives the dictionary's df/cf the same way; fsck I1),
+    LRU-cached per term with misses; a term a query only df-checks
+    reads just those two columns. Served queries never read the
+    dictionary; prefix_terms, vocab_terms and the pre-meta eager path
+    do. Memory is therefore bounded by the caches, not the vocabulary
+    size (a 10^8-term dictionary would otherwise be tens of GB of
+    Python dicts on a serving node).
     """
 
     _COLUMNS = ["term", "seg", "salt", "n", "doc_ids", "tfs", "doclens",
@@ -566,7 +567,7 @@ class LocalSearcher:
             qterms = list(dict.fromkeys(qtext_or_terms))
         if isinstance(exclude, str):
             exclude = analyze_query(exclude, stem=stem)
-        self._first_contact([*qterms, *(exclude or ())])
+        self.prefetch([*qterms, *(exclude or ())])
         if mode == "and" and any(t not in self._df for t in qterms):
             return []
         qterms = [t for t in qterms if t in self._df]
@@ -697,8 +698,7 @@ class LocalSearcher:
             exclude = analyze_query(exclude, stem=stem)
         if after is not None:
             after = (int(after[0]), float(after[1]))
-        self._first_contact([*(t for g in groups for t in g),
-                             *(exclude or ())])
+        self.prefetch([*(t for g in groups for t in g), *(exclude or ())])
         groups = [[t for t in g if t in self._df] for g in groups]
         if not groups or any(not g for g in groups):
             return []  # empty query, or an unsatisfiable group
@@ -847,7 +847,7 @@ class LocalSearcher:
         # full (non-deduplicated) term vector — analyze_query would
         # collapse repeats and flatten every tf to 1
         tf = Counter(analyze(text, stem=stem))
-        self._first_contact(tf)
+        self.prefetch(tf, scored=False)
         scored = sorted(
             (-round(n * self._idf(t), 6), t)
             for t, n in tf.items()
@@ -861,41 +861,33 @@ class LocalSearcher:
         """(df, bucket, cf) for term, or None if absent: df = Σ n and
         cf = Σ tf_sum over the term's segments — the sums the build
         writes into the dictionary — LRU-cached (misses cached too:
-        absent query terms are common and must stay cheap). cf is None
-        when the segments predate tf_sum (and on the eager path)."""
+        absent query terms are common and must stay cheap). A miss
+        reads only the term's n/tf_sum columns; a query's terms arrive
+        through prefetch first. cf is None when the segments predate
+        tf_sum (and on the eager path)."""
         if self._eager:
             df = self._eager_df.get(term)
             return (None if df is None
                     else (df, self._eager_bucket[term], None))
         cache = self._dict_cache
-        if term in cache:
-            val = cache.pop(term)
-            cache[term] = val  # refresh recency
-            return val
-        segs = self._segments(term)  # a read records the row itself
-        return cache[term] if term in cache else self._note_stats(term, segs)
+        if term not in cache:
+            self._read_terms((term,), stats_only=True)
+        val = cache.pop(term)
+        cache[term] = val  # refresh recency
+        return val
 
-    def _note_stats(self, term: str, segs: _Segs):
-        """Cache and return term's (df, bucket, cf) row from its segments."""
-        from search_engine_spark.functions.hashing import term_bucket
-
-        row = None if len(segs) == 0 else (
-            int(segs.n.sum()), term_bucket(term, self.n_buckets),
-            None if segs.tf_sum is None else int(segs.tf_sum.sum()),
-        )
-        cache = self._dict_cache
-        cache.pop(term, None)
-        if len(cache) >= self._DICT_CACHE:
-            cache.pop(next(iter(cache)))
-        cache[term] = row
-        return row
-
-    def _first_contact(self, terms) -> None:
-        """One batched postings read for the terms whose df/cf are not
-        cached yet, before a query's first df check."""
+    def prefetch(self, terms, *, scored: bool = True) -> None:
+        """First contact for a query's terms in one batch, ahead of its
+        df checks: the terms whose (df, bucket, cf) is not cached yet
+        are read with one postings read per admitted row group. The
+        segments of `scored` terms enter the term cache, since the
+        query reads them next; otherwise (terms a query only
+        df-checks: more-like-this candidates, phrase tokens) only the
+        term/n/tf_sum columns are read, so no blob is read and the
+        segment hot set is not evicted."""
         if not self._eager:
-            self._segments_many(
-                [t for t in terms if t not in self._dict_cache])
+            self._read_terms([t for t in terms if t not in self._dict_cache],
+                             stats_only=not scored)
 
     def _idf(self, term: str) -> float:
         # _idf_df (plans/federate): dict-like override giving the
@@ -916,59 +908,72 @@ class LocalSearcher:
         return v
 
     def _segments(self, term: str) -> _Segs:
-        """All segments of a term as columns (see _segments_many)."""
+        """All segments of a term as columns (see _read_terms)."""
         hit = self._lru_hit(self._term_cache, term)
-        return hit if hit is not None else self._segments_many((term,))[term]
+        return hit if hit is not None else self._read_terms((term,))[term]
 
-    def _segments_many(self, terms) -> dict[str, _Segs]:
-        """term -> all its segments (metadata + blobs) as columns.
-        Uncached terms are grouped by the row groups whose stats admit
-        them; each such row group is read once, single-threaded (a
-        serving read is one small row group, where pyarrow's thread
-        pool costs more than it saves), and filtered to each term's
-        rows in Arrow in (file, row group) order. Read terms also
-        record their (df, bucket, cf) row; a term known absent is not
-        read. LRU-cached per term for the serving hot set."""
-        from search_engine_spark.functions.hashing import term_bucket
-
+    def _read_terms(self, terms, *, stats_only: bool = False
+                    ) -> dict[str, _Segs]:
+        """Read terms from the postings row groups whose stats admit
+        them, each such row group once, and keep each term's rows with
+        an Arrow filter in (file, row group) order. Records every
+        term's (df, bucket, cf) row (a term known absent is not read)
+        and, unless stats_only, returns term -> its segments (metadata
+        + blobs) as columns, LRU-caching the non-empty ones for the
+        serving hot set. stats_only reads just term/n/tf_sum."""
         out: dict[str, _Segs] = {}
-        want: dict[str, list[tuple[str, int]]] = {}
-        for t in dict.fromkeys(terms):
-            hit = self._lru_hit(self._term_cache, t)
-            if hit is not None:
-                out[t] = hit
-            elif self._eager:
-                b = self._eager_bucket.get(t)
-                want[t] = [] if b is None else self._admitted(t, b)
-            elif self._dict_cache.get(t, 0) is None:  # known absent
-                want[t] = []
-            else:
-                want[t] = self._admitted(t, term_bucket(t, self.n_buckets))
         tables = {}
-        for t, rgs in want.items():
+        for t in dict.fromkeys(terms):
+            if self._eager:
+                b = self._eager_bucket.get(t)
+            elif self._dict_cache.get(t, 0) is None:  # known absent
+                b = None
+            else:
+                b = term_bucket(t, self.n_buckets)
             parts = []
-            for path, rg in rgs:
+            for path, rg in self._admitted(t, b):
                 tbl = tables.get((path, rg))
                 if tbl is None:
+                    cols = [c for c in self._cols[path]
+                            if not stats_only or c in ("term", "n", "tf_sum")]
                     tbl = tables[path, rg] = self._files[path].read_row_groups(
-                        [rg], columns=self._cols[path], use_threads=False)
+                        [rg], columns=cols)
                 parts.append(tbl.filter(pc.equal(tbl["term"], t)))
             if any(p.num_columns != parts[0].num_columns for p in parts):
-                parts = [p.select(self._COLUMNS) for p in parts]
-            segs = out[t] = _Segs(
-                pa.concat_tables(parts) if parts
-                else self._dataset.schema.empty_table(),
-                self._tfnorm_scale,
-            )
+                parts = [p.drop_columns(["tf_sum"])
+                         if "tf_sum" in p.column_names else p for p in parts]
+            tbl = (pa.concat_tables(parts) if parts
+                   else self._dataset.schema.empty_table())
             if not self._eager:
-                self._note_stats(t, segs)
+                self._note_stats(t, tbl)
+            if stats_only:
+                continue
+            segs = out[t] = _Segs(tbl, self._tfnorm_scale)
             if len(segs):
                 if len(self._term_cache) >= self._cache_terms:
                     self._term_cache.pop(next(iter(self._term_cache)))
                 self._term_cache[t] = segs
         return out
 
-    def _admitted(self, term: str, bucket: int) -> list[tuple[str, int]]:
+    def _note_stats(self, term: str, tbl: pa.Table) -> None:
+        """Cache term's (df, bucket, cf) row from its postings rows:
+        None when it has none, cf None when tf_sum is missing or null
+        (pre-tf_sum segments)."""
+        row = None
+        if tbl.num_rows:
+            ts = tbl["tf_sum"] if "tf_sum" in tbl.column_names else None
+            row = (int(pc.sum(tbl["n"]).as_py()),
+                   term_bucket(term, self.n_buckets),
+                   None if ts is None or ts.null_count
+                   else int(pc.sum(ts).as_py()))
+        cache = self._dict_cache
+        cache.pop(term, None)
+        if len(cache) >= self._DICT_CACHE:
+            cache.pop(next(iter(cache)))
+        cache[term] = row
+
+    def _admitted(self, term: str, bucket: int | None
+                  ) -> list[tuple[str, int]]:
         """(file, row group) pairs of `bucket` whose term range admits
         `term`, in file and row-group order."""
         return [(path, rg) for path, rg, lo, hi in self._rg.get(bucket, ())
@@ -1080,10 +1085,8 @@ class LocalSearcher:
         containing an excluded term anywhere must be suppressed — so
         they ride the same query-independent decoded cache the
         positive terms use. Unknown terms are no-ops."""
-        exclude = list(dict.fromkeys(exclude or []))
-        self._first_contact(exclude)
         arrs = []
-        for t in exclude:
+        for t in dict.fromkeys(exclude or []):
             if t in self._df:
                 arrs.append(self._load_full(t, self._idf(t))[0])
         if not arrs:
@@ -1202,7 +1205,7 @@ class LocalSearcher:
             qterms = list(dict.fromkeys(qtext_or_terms))
         if isinstance(exclude, str):
             exclude = analyze_query(exclude, stem=stem)
-        self._first_contact([*qterms, *(exclude or ())])
+        self.prefetch([*qterms, *(exclude or ())])
         excl = self._excluded_docs(exclude) if exclude else None
         excl = self._merge_excl(excl, exclude_docs)
         allow = self._norm_restrict(restrict)
@@ -1360,8 +1363,7 @@ class LocalSearcher:
                   after=None):
         """Block-max executor (see module docstring). Returns
         (hits, segments skipped)."""
-        by_term = self._segments_many(q.terms)
-        segs = [by_term[t] for t in q.terms]
+        segs = [self._segments(t) for t in q.terms]
 
         def bound(j):
             m = segs[j].max_tfnorm

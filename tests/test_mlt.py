@@ -84,3 +84,25 @@ def test_mlt_requires_docstore(spark, documents, tmp_path):
                 stem=False)
     with pytest.raises(FileNotFoundError):
         LocalSearcher(d).more_like_this(0, stem=False)
+
+
+def test_mlt_reads_blobs_of_scored_terms_only(index_dir, documents_pdf):
+    """Every source-doc term is df-checked from the postings' n/tf_sum
+    columns alone; only the n_terms scored terms' segments are read
+    with their blobs and enter the term cache."""
+    s = LocalSearcher(index_dir)
+    blob_reads = []
+    for path, pf in list(s._files.items()):
+        def read(rgs, columns=None, _pf=pf, **kw):
+            if "doc_ids" in columns:
+                blob_reads.append(rgs)
+            return _pf.read_row_groups(rgs, columns=columns, **kw)
+        s._files[path] = type("_Counted", (), {
+            "read_row_groups": staticmethod(read)})()
+    row = max(documents_pdf.itertuples(), key=lambda r: len(set(r.text.split())))
+    terms = set(row.text.split())
+    assert len(terms) > 5
+    assert s.more_like_this(int(row.doc_id), k=10, n_terms=5, stem=False)
+    assert terms <= set(s._dict_cache)
+    assert 0 < len(s._term_cache) <= 5 and set(s._term_cache) <= terms
+    assert 0 < len(blob_reads) <= 5

@@ -370,25 +370,51 @@ def _dictionary(index_dir):  # noqa: F811
                          columns=["term", "df", "bucket", "cf"]).to_pylist()
 
 
+def _count_reads(s: LocalSearcher) -> list:
+    """Record (row groups, columns) of every postings read of s."""
+    reads = []
+
+    class _Counted:
+        def __init__(self, pf):
+            self._pf = pf
+
+        def read_row_groups(self, rgs, columns=None, **kw):
+            reads.append((rgs, columns))
+            return self._pf.read_row_groups(rgs, columns=columns, **kw)
+
+    s._files = {p: _Counted(pf) for p, pf in s._files.items()}
+    return reads
+
+
 def test_dict_lookup_matches_dictionary(index_dir):  # noqa: F811
     """df/cf served from the segments equal the dictionary table's
-    row for every term, whether the term arrives in a batch or
-    alone; an absent term is None."""
+    row for every term, whether the term arrives in a scored batch, a
+    df-only batch or alone; an absent term is None. df-only reads
+    (batch or single) read no blob column and cache no segments."""
     rows = _dictionary(index_dir)
     want = {r["term"]: (r["df"], r["bucket"], r["cf"]) for r in rows}
-    batch, single = LocalSearcher(index_dir), LocalSearcher(index_dir)
-    batch._first_contact(list(want))
+    batch, stats, single = (LocalSearcher(index_dir) for _ in range(3))
+    stats_reads = _count_reads(stats)
+    single_reads = _count_reads(single)
+    batch.prefetch(list(want))
+    stats.prefetch(list(want), scored=False)
+    assert len(stats_reads) == sum(map(len, batch._rg.values()))
     for t, row in want.items():
         assert batch._dict_lookup(t) == row, t
+        assert stats._dict_lookup(t) == row, t
     for t in sorted(want)[::7]:
         assert single._dict_lookup(t) == want[t], t
-    assert batch._dict_lookup("qqqzzz") is None
-    assert single._dict_lookup("qqqzzz") is None
+    for s in (batch, stats, single):
+        assert s._dict_lookup("qqqzzz") is None
+    assert batch._term_cache
+    assert not stats._term_cache and not single._term_cache
+    for _, cols in stats_reads + single_reads:
+        assert set(cols) == {"term", "n", "tf_sum"}, cols
 
 
 @pytest.mark.parametrize("layout", ["as_built", "rg7"])
-def test_segments_many_equals_segments(index_dir, tmp_path_factory,  # noqa: F811
-                                       layout):
+def test_batched_read_equals_segments(index_dir, tmp_path_factory,  # noqa: F811
+                                      layout):
     """One batched read per row group builds each term's segments
     column for column as the per-term reader does: terms sharing a
     row group, terms of other buckets, absent terms, and terms
@@ -407,7 +433,7 @@ def test_segments_many_equals_segments(index_dir, tmp_path_factory,  # noqa: F81
     b0, b1 = sorted(by_bucket)[:2]
     terms = (sorted(by_bucket[b0])[:5] + sorted(by_bucket[b1])[::9]
              + ["the", *sorted(absent)])
-    many = LocalSearcher(d)._segments_many(terms)
+    many = LocalSearcher(d)._read_terms(terms)
     one = LocalSearcher(d)
     assert list(many) == terms
     for t in terms:
@@ -460,17 +486,7 @@ def test_first_contact_reads_each_row_group_once(index_dir):  # noqa: F811
     per-term re-read."""
     s = LocalSearcher(index_dir)
     _forbid_dictionary_reads(s)
-    reads = []
-
-    class _Counted:
-        def __init__(self, pf):
-            self._pf = pf
-
-        def read_row_groups(self, *a, **kw):
-            reads.append(a[0])
-            return self._pf.read_row_groups(*a, **kw)
-
-    s._files = {p: _Counted(pf) for p, pf in s._files.items()}
+    reads = _count_reads(s)
     by_rgs = {}
     for r in _dictionary(index_dir):
         rgs = tuple(s._admitted(r["term"], r["bucket"]))
