@@ -45,10 +45,10 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-import pyarrow.compute as pc
-import pyarrow.dataset as ds
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from search_engine_spark.plans.footer import footer_index, key_rows
+from search_engine_spark.plans.publish import write_json
 
 BIGRAMS_SCHEMA = "term string, doc_id long, tf int"
 DEFAULT_TOP_TERMS = 32
@@ -171,16 +171,16 @@ def build_bigrams(
         .partitionBy("bucket")
         .parquet(out)
     )
-    with open(meta_path, "w") as f:
-        json.dump({"n_buckets": n_buckets, "stem": stem,
-                   "top_terms": int(top_terms), "hot": sorted(hot)}, f)
+    write_json(meta_path, {"n_buckets": n_buckets, "stem": stem,
+                           "top_terms": int(top_terms), "hot": sorted(hot)})
     return out
 
 
 class BigramReader:
-    """Row-group-pruned local reads over the bigram table — the same
-    pure/mixed row-group walk as PhraseSearcher._term_rows, minus the
-    position blobs (a bigram row is just (doc_id, tf))."""
+    """Footer-indexed local reads over the bigram table (plans/footer
+    key_rows, as PhraseSearcher._term_rows, minus the position blobs:
+    a bigram row is just (doc_id, tf)). Opened by PhraseSearcher on
+    its pinned root."""
 
     _CACHE = 256
 
@@ -191,23 +191,8 @@ class BigramReader:
         self.n_buckets = int(meta["n_buckets"])
         self.stem = bool(meta["stem"])
         self.hot = frozenset(meta["hot"])
-        root = os.path.join(index_dir, "bigrams")
-        self._files: dict[str, pq.ParquetFile] = {}
-        self._rg: dict[int, list[tuple[str, int, str, str]]] = {}
-        for frag in ds.dataset(
-            root, format="parquet", partitioning="hive"
-        ).get_fragments():
-            path = frag.path
-            bucket = int(path.split("bucket=")[1].split("/")[0])
-            pf = pq.ParquetFile(path)
-            self._files[path] = pf
-            term_idx = pf.schema_arrow.get_field_index("term")
-            md = pf.metadata
-            for rg in range(md.num_row_groups):
-                stats = md.row_group(rg).column(term_idx).statistics
-                lo = stats.min if stats is not None else None
-                hi = stats.max if stats is not None else None
-                self._rg.setdefault(bucket, []).append((path, rg, lo, hi))
+        self._files, self._rg = footer_index(
+            os.path.join(index_dir, "bigrams"), "term")
         self._cache: dict[str, tuple[np.ndarray, np.ndarray]] = {}
 
     def covers(self, w1: str, w2: str) -> bool:
@@ -227,29 +212,9 @@ class BigramReader:
         b = term_bucket(term, self.n_buckets)
         docs_parts: list[np.ndarray] = []
         tf_parts: list[np.ndarray] = []
-        runs: list[tuple[str, list[int], bool]] = []
-        for path, rg, lo, hi in self._rg.get(b, ()):
-            if (lo is None or lo <= term) and (hi is None or term <= hi):
-                pure = lo == term and hi == term
-                if runs and runs[-1][2] and pure and runs[-1][0] == path:
-                    runs[-1][1].append(rg)
-                else:
-                    runs.append((path, [rg], pure))
-        for path, rgs, pure in runs:
-            if pure:
-                sel = self._files[path].read_row_groups(
-                    rgs, columns=["doc_id", "tf"]
-                )
-            else:
-                tbl = self._files[path].read_row_groups(
-                    rgs, columns=["term", "doc_id", "tf"]
-                )
-                sel = tbl.filter(pc.equal(tbl["term"], term))
-            if sel.num_rows:
-                docs_parts.append(
-                    sel["doc_id"].to_numpy(zero_copy_only=False)
-                )
-                tf_parts.append(sel["tf"].to_numpy(zero_copy_only=False))
+        for sel in key_rows(self._files, self._rg, term, b, ["doc_id", "tf"]):
+            docs_parts.append(sel["doc_id"].to_numpy(zero_copy_only=False))
+            tf_parts.append(sel["tf"].to_numpy(zero_copy_only=False))
         if docs_parts:
             docs = np.concatenate(docs_parts)
             tfs = np.concatenate(tf_parts).astype(np.int64)

@@ -58,6 +58,7 @@ from search_engine_spark.plans.manifest import Manifest
 from search_engine_spark.plans.publish import (
     exchange_dirs as _exchange_dirs,  # noqa: F401 (re-export for tests)
     publish_dir as _publish_dir,
+    write_json,
 )
 
 # tombstone sets up to this size ride in the decode UDF's closure
@@ -337,8 +338,7 @@ def _compact_apply(
         )
         # meta unchanged (n_buckets/stem are physical invariants) but
         # rewritten for mtime-based cache busting by long-lived readers
-        with open(os.path.join(index_dir, "positions_meta.json"), "w") as f:
-            json.dump(pmeta, f)
+        write_json(os.path.join(index_dir, "positions_meta.json"), pmeta)
 
     bigrams = os.path.join(index_dir, "bigrams")
     if os.path.isdir(bigrams):
@@ -362,8 +362,7 @@ def _compact_apply(
         )
         # the frozen hot list stays: which PAIRS are indexed is a
         # physical invariant; only rows of deleted docs leave
-        with open(os.path.join(index_dir, "bigrams_meta.json"), "w") as f:
-            json.dump(bmeta, f)
+        write_json(os.path.join(index_dir, "bigrams_meta.json"), bmeta)
 
     # field indexes (fields/<name>) share the doc_id space and the
     # ordinary index format — recurse so their postings AND collection

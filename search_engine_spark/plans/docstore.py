@@ -9,9 +9,9 @@ build_docstore — (doc_id, text) table under <index_dir>/docstore,
                  doc_id-sorted in 1 MiB row groups so a top-k fetch
                  reads O(k) row groups via footer statistics, never
                  the corpus (same seek structure as urlmap).
-DocStore       — pyarrow reader with a footer-built (min, max) row
-                 group index over doc_id; get_texts is row-group
-                 pruned and tombstone-masked (plans/deletes).
+DocStore       — pyarrow reader over the footer (min, max) doc_id
+                 row-group index (plans/footer); get_texts is
+                 row-group pruned and tombstone-masked (plans/deletes).
 snippet        — deterministic query-biased snippet: the width-token
                  window with the most DISTINCT query terms (ties →
                  earliest), matched tokens bracketed. Tokens are the
@@ -62,31 +62,21 @@ def build_docstore(
 
 
 class DocStore:
-    """Row-group-pruned stored-field reads — no Spark job (serving
-    path; mirrors plans/wand.py's footer-index pattern)."""
+    """Row-group-pruned stored-field reads over a footer doc_id index
+    (plans/footer) — no Spark job (serving path)."""
 
     def __init__(self, index_dir: str):
-        import pyarrow.dataset as ds
-        import pyarrow.parquet as pq
+        from search_engine_spark.plans.publish import open_pinned
 
+        open_pinned(index_dir, self._open)
+
+    def _open(self, index_dir: str) -> None:
         from search_engine_spark.plans.deletes import load_tombstones
-        from search_engine_spark.plans.publish import resolve_root
+        from search_engine_spark.plans.footer import footer_index
 
-        index_dir = resolve_root(index_dir)  # pin one generation
         self.root = index_dir
-        path = os.path.join(index_dir, "docstore")
-        self._files: dict[str, pq.ParquetFile] = {}
-        self._rg: list[tuple[str, int, int, int]] = []
-        for frag in ds.dataset(path, format="parquet").get_fragments():
-            pf = pq.ParquetFile(frag.path)
-            self._files[frag.path] = pf
-            idx = pf.schema_arrow.get_field_index("doc_id")
-            md = pf.metadata
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                lo = st.min if st is not None else None
-                hi = st.max if st is not None else None
-                self._rg.append((frag.path, rg, lo, hi))
+        self._files, self._rg = footer_index(
+            os.path.join(index_dir, "docstore"), "doc_id")
         self._deleted = load_tombstones(index_dir)
 
     def get_texts(self, doc_ids) -> dict[int, str]:
@@ -98,6 +88,7 @@ class DocStore:
         import pyarrow.compute as pc
 
         from search_engine_spark.plans.deletes import mask_deleted
+        from search_engine_spark.plans.footer import admitted
 
         ids = np.unique(np.asarray(list(doc_ids), dtype=np.int64))
         (ids,) = mask_deleted(self._deleted, ids)
@@ -106,11 +97,7 @@ class DocStore:
         lo_req, hi_req = int(ids[0]), int(ids[-1])
         out: dict[int, str] = {}
         id_set = pa.array(ids, type=pa.int64())
-        for path, rg, lo, hi in self._rg:
-            if (hi is not None and hi < lo_req) or (
-                lo is not None and lo > hi_req
-            ):
-                continue
+        for path, rg, _, _ in admitted(self._rg, lo_req, hi=hi_req):
             tbl = self._files[path].read_row_groups(
                 [rg], columns=["doc_id", "text"]
             )

@@ -81,8 +81,7 @@ from __future__ import annotations
 import json
 import os
 
-import pyarrow.parquet as pq
-
+from search_engine_spark.plans.footer import footer_index
 from search_engine_spark.plans.wand import LocalSearcher
 
 _BEYOND = 1 << 62  # cursor sentinel: no doc_id can exceed it
@@ -95,18 +94,9 @@ def _max_allocated_id(index_dir: str) -> int:
     pages), mirroring plans/merge._max_allocated_id's Spark agg."""
     urlmap = os.path.join(index_dir, "urlmap")
     root = urlmap if os.path.isdir(urlmap) else os.path.join(index_dir, "docs")
-    hi = -1
-    for name in os.listdir(root):
-        if not name.endswith(".parquet"):
-            continue
-        pf = pq.ParquetFile(os.path.join(root, name))
-        idx = pf.schema_arrow.get_field_index("doc_id")
-        md = pf.metadata
-        for rg in range(md.num_row_groups):
-            stats = md.row_group(rg).column(idx).statistics
-            if stats is not None and stats.max is not None:
-                hi = max(hi, int(stats.max))
-    return hi
+    _, groups = footer_index(root, "doc_id")
+    return max((int(hi) for _, _, _, hi in groups.get(None, ())
+                if hi is not None), default=-1)
 
 
 class _GlobalDF:

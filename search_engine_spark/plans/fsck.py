@@ -174,7 +174,8 @@ def fsck_distributed(spark, index_dir: str) -> dict:
 
     I1/I2 — explode decoded (term, doc_id) -> per-term count vs
         count(DISTINCT doc_id) vs dictionary df (full outer join also
-        catches terms present on only one side);
+        catches terms present on only one side); the decoded tf sum vs
+        dictionary cf and vs the segments' Σ tf_sum;
     I3/I6 — order violations, blob-length mismatches, and
         non-positive doclens counted inside the decode kernel;
     I4 — bucket routing for every dictionary row via the same JVM
@@ -189,9 +190,8 @@ def fsck_distributed(spark, index_dir: str) -> dict:
     from pyspark.sql import functions as F
 
     errors: list[str] = []
-    segs = spark.read.parquet(os.path.join(index_dir, "postings")).select(
-        "term", "n", "doc_ids", "tfs", "doclens"
-    )
+    postings = spark.read.parquet(os.path.join(index_dir, "postings"))
+    segs = postings.select("term", "n", "doc_ids", "tfs", "doclens")
 
     def kernel(batches):
         for pdf in batches:
@@ -239,12 +239,12 @@ def fsck_distributed(spark, index_dir: str) -> dict:
         .agg(
             F.count("*").cast("long").alias("n_postings"),
             F.count_distinct(F.col("doc_id")).cast("long").alias("n_docs"),
+            F.sum("tf").cast("long").alias("tf_total"),
         )
-        .persist()  # reused by the mismatch scan AND the totals
+        .persist()  # reused by the mismatch scans AND the totals
     )
-    dic = spark.read.parquet(os.path.join(index_dir, "dictionary")).select(
-        "term", "df", "bucket"
-    )
+    dic_all = spark.read.parquet(os.path.join(index_dir, "dictionary"))
+    dic = dic_all.select("term", "df", "bucket")
     joined = per_term.join(dic, "term", "full_outer")
     bad = joined.filter(
         F.col("df").isNull()
@@ -258,6 +258,23 @@ def fsck_distributed(spark, index_dir: str) -> dict:
             f"I1/I2: term {r.term!r} dictionary df={r.df} decoded "
             f"distinct={r.n_docs} postings={r.n_postings}"
         )
+    # I1 cf legs, each where its column exists: dictionary cf and
+    # the segments' Σ tf_sum (null when any segment predates tf_sum)
+    # against the decoded tf sum — serving takes cf from tf_sum
+    cf_legs = []
+    if "cf" in dic_all.columns:
+        cf_legs.append(("dictionary cf",
+                        dic_all.select("term", F.col("cf").alias("v"))))
+    if "tf_sum" in postings.columns:
+        cf_legs.append(("segments' tf_sum sum", postings.groupBy("term").agg(
+            F.when(F.count("tf_sum") == F.count("*"), F.sum("tf_sum"))
+            .alias("v"))))
+    for name, side in cf_legs:
+        drift = per_term.join(side, "term").filter(
+            F.col("v").isNotNull() & (F.col("v") != F.col("tf_total")))
+        for r in drift.limit(20).collect():
+            errors.append(f"I1 cf: term {r.term!r} {name}={r.v} decoded "
+                          f"tf sum={r.tf_total}")
     with open(os.path.join(index_dir, "index_meta.json")) as f:
         n_buckets = int(json.load(f)["n_buckets"])
     routing_bad = dic.filter(

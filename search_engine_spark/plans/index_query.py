@@ -72,13 +72,19 @@ class IndexReader:
     """Handle to a built index directory."""
 
     def __init__(self, spark: SparkSession, index_dir: str):
-        from search_engine_spark.plans.build_index import _read_meta
-
-        from search_engine_spark.plans.publish import resolve_root
+        from search_engine_spark.plans.publish import open_pinned
 
         self.spark = spark
-        self.paths = IndexPaths(resolve_root(index_dir))
-        meta = _read_meta(spark, self.paths)
+        open_pinned(index_dir, self._open)
+
+    def _open(self, root: str) -> None:
+        from search_engine_spark.plans.build_index import _read_meta
+        from search_engine_spark.plans.deletes import (
+            IN_CLOSURE_MAX, load_tombstones,
+        )
+
+        self.paths = IndexPaths(root)
+        meta = _read_meta(self.spark, self.paths)
         self.n_docs = int(meta["n_docs"])
         self.avgdl = float(meta["avgdl"])
         self.n_buckets = int(meta["n_buckets"])
@@ -94,19 +100,13 @@ class IndexReader:
         # Arrow batch, zero extra plan nodes); huge sets anti-join
         # instead so the task closure never ships an unbounded array.
         # df/n_docs/avgdl stay build-time values until compact_index.
-        from search_engine_spark.plans.deletes import (
-            IN_CLOSURE_MAX, load_tombstones,
-        )
-
-        self._deleted = load_tombstones(index_dir)
+        self._deleted = load_tombstones(root)
         self._deleted_in_closure = self._deleted.size <= IN_CLOSURE_MAX
         # static additive doc prior (PageRank etc): lazily-read
         # (doc_id, boost) table; joined onto results when present.
         # Written by `index_admin.py pagerank` / set-boosts.
-        import os as _os
-
-        self._boosts_dir = _os.path.join(index_dir, "boosts")
-        self._has_boosts = _os.path.isdir(self._boosts_dir)
+        self._boosts_dir = os.path.join(root, "boosts")
+        self._has_boosts = os.path.isdir(self._boosts_dir)
 
     def clear_static_boosts(self) -> None:
         """Score pure BM25 even when the index carries a boosts table

@@ -224,9 +224,8 @@ def _merge_bigrams_into(spark, target_dir: str, src_dir: str,
         .partitionBy("bucket")
         .parquet(dest)
     )
-    meta = _bigrams_meta(target_dir)  # read BEFORE the truncating open
-    with open(os.path.join(meta_dir, "bigrams_meta.json"), "w") as f:
-        json.dump(meta, f)
+    write_json(os.path.join(meta_dir, "bigrams_meta.json"),
+               _bigrams_meta(target_dir))
     return True
 
 
@@ -508,9 +507,8 @@ def _merge_into_apply(
             .parquet(t_pos)
         )
         # content unchanged; rewritten for mtime-based cache busting
-        pmeta = _positions_meta(target_dir)
-        with open(os.path.join(target_dir, "positions_meta.json"), "w") as f:
-            json.dump(pmeta, f)
+        write_json(os.path.join(target_dir, "positions_meta.json"),
+                   _positions_meta(target_dir))
         merged_positions = True
     merged_bigrams = _merge_bigrams_into(
         spark, target_dir, incoming_dir, offset
@@ -648,8 +646,8 @@ def _merge_rebuild(
             .partitionBy("bucket")
             .parquet(os.path.join(out_dir, "positions"))
         )
-        with open(os.path.join(out_dir, "positions_meta.json"), "w") as f:
-            json.dump(_positions_meta(a_dir), f)
+        write_json(os.path.join(out_dir, "positions_meta.json"),
+                   _positions_meta(a_dir))
         merged_positions = True
     merged_bigrams = _merge_bigrams_into(
         spark, a_dir, b_dir, offset, union=True, out_dir=out_dir

@@ -45,6 +45,7 @@ import re
 import numpy as np
 
 from search_engine_spark.plans.build_index import build_index
+from search_engine_spark.plans.publish import open_pinned
 from search_engine_spark.plans.scoring import analyze_query
 from search_engine_spark.plans.wand import LocalSearcher
 
@@ -793,6 +794,10 @@ class MultiFieldSearcher:
                  field_weights: dict[str, float] | None = None):
         if field_weights is None:
             field_weights = {"title": float(title_weight)}
+        # body and every field searcher open on ONE pinned generation
+        open_pinned(index_dir, lambda root: self._open(root, field_weights))
+
+    def _open(self, index_dir: str, field_weights: dict[str, float]) -> None:
         self.fields: dict[str, tuple[LocalSearcher, float]] = {}
         for name, w in field_weights.items():
             fdir = os.path.join(index_dir, "fields", name)

@@ -34,17 +34,15 @@ from __future__ import annotations
 
 import json
 import os
-import time
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-import pyarrow.compute as pc
-import pyarrow.dataset as ds
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from search_engine_spark.functions.codec import decode_varints, encode_varints_runs
+from search_engine_spark.plans.footer import footer_index, key_rows
+from search_engine_spark.plans.publish import open_pinned, write_json
 
 POSITIONS_SCHEMA = "term string, doc_id long, npos int, positions binary"
 
@@ -196,8 +194,7 @@ def build_positions(
         .partitionBy("bucket")
         .parquet(out)
     )
-    with open(meta_path, "w") as f:
-        json.dump({"n_buckets": n_buckets, "stem": stem}, f)
+    write_json(meta_path, {"n_buckets": n_buckets, "stem": stem})
     return out
 
 
@@ -402,8 +399,7 @@ def near_docs_distributed(
 
 class PhraseSearcher:
     """Local serving path for exact-phrase queries over the positional
-    table — pyarrow row-group-pruned reads, no Spark job, mirroring
-    plans/wand.py LocalSearcher's seek structure.
+    table — footer-indexed pyarrow reads (plans/footer), no Spark job.
 
     search_phrase evaluation order (cheapest filter first):
     1. per phrase term: (doc_ids, blobs) via bucket + row-group-stat
@@ -419,27 +415,9 @@ class PhraseSearcher:
     _CACHE = 512
 
     def __init__(self, index_dir: str):
-        from search_engine_spark.plans.publish import resolve_root
+        open_pinned(index_dir, self._open)
 
-        requested = index_dir
-        for attempt in (0, 1):
-            try:
-                self._open_pinned(resolve_root(requested))
-                # plain-dir opens must not race the one-time
-                # legacy->generation conversion commit (see
-                # LocalSearcher._open's recheck): retry once
-                if (self.root == os.path.abspath(requested)
-                        and resolve_root(requested) != self.root):
-                    raise FileNotFoundError(
-                        f"{requested}: generation committed during open"
-                    )
-                return
-            except (FileNotFoundError, OSError):
-                if attempt:
-                    raise
-                time.sleep(0.05)
-
-    def _open_pinned(self, index_dir: str) -> None:
+    def _open(self, index_dir: str) -> None:
         with open(os.path.join(index_dir, "positions_meta.json")) as f:
             meta = json.load(f)
         self.root = index_dir
@@ -450,23 +428,8 @@ class PhraseSearcher:
         from search_engine_spark.plans.deletes import load_tombstones
 
         self._deleted = load_tombstones(index_dir)
-        root = os.path.join(index_dir, "positions")
-        self._files: dict[str, pq.ParquetFile] = {}
-        self._rg: dict[int, list[tuple[str, int, str, str]]] = {}
-        for frag in ds.dataset(
-            root, format="parquet", partitioning="hive"
-        ).get_fragments():
-            path = frag.path
-            bucket = int(path.split("bucket=")[1].split("/")[0])
-            pf = pq.ParquetFile(path)
-            self._files[path] = pf
-            term_idx = pf.schema_arrow.get_field_index("term")
-            md = pf.metadata
-            for rg in range(md.num_row_groups):
-                stats = md.row_group(rg).column(term_idx).statistics
-                lo = stats.min if stats is not None else None
-                hi = stats.max if stats is not None else None
-                self._rg.setdefault(bucket, []).append((path, rg, lo, hi))
+        self._files, self._rg = footer_index(
+            os.path.join(index_dir, "positions"), "term")
         self._term_cache: dict[str, tuple[np.ndarray, list[bytes]]] = {}
         # decoded-positions cache: term -> (flat positions, per-row
         # start offsets into them). Bounded by total cached VALUES
@@ -620,35 +583,14 @@ class PhraseSearcher:
             len_parts.append(offs[1:] - offs[:-1])
             data_base += used.size
 
-        # a hot term spans many row groups whose stats are [term, term]
-        # — those are PURE: every row is ours, so skip decoding the
-        # term string column and the filter, and read consecutive runs
-        # of them in one batched call. Only boundary (mixed) row
-        # groups pay the term-column read + equality filter. Parts are
-        # assembled in row-group order: the table is (term, doc_id)-
-        # sorted per file, so a single-file bucket arrives already
-        # doc-sorted and the argsort below short-circuits.
-        runs: list[tuple[str, list[int], bool]] = []  # (path, rgs, pure)
-        for path, rg, lo, hi in self._rg.get(b, ()):
-            if (lo is None or lo <= term) and (hi is None or term <= hi):
-                pure = lo == term and hi == term
-                if (runs and runs[-1][2] and pure
-                        and runs[-1][0] == path):
-                    runs[-1][1].append(rg)
-                else:
-                    runs.append((path, [rg], pure))
-        for path, rgs, pure in runs:
-            if pure:
-                sel = self._files[path].read_row_groups(
-                    rgs, columns=["doc_id", "npos", "positions"]
-                )
-            else:
-                tbl = self._files[path].read_row_groups(
-                    rgs, columns=["term", "doc_id", "npos", "positions"]
-                )
-                sel = tbl.filter(pc.equal(tbl["term"], term))
-            if sel.num_rows:
-                _append(sel)
+        # parts arrive in row-group order (plans/footer.key_rows: a hot
+        # term's pure row groups skip the term column and the filter):
+        # the table is (term, doc_id)-sorted per file, so a single-file
+        # bucket arrives already doc-sorted and the argsort below
+        # short-circuits.
+        for sel in key_rows(self._files, self._rg, term, b,
+                            ["doc_id", "npos", "positions"]):
+            _append(sel)
         if docs_parts:
             docs = np.concatenate(docs_parts)
             npos = np.concatenate(npos_parts).astype(np.int64)

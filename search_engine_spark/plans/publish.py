@@ -21,10 +21,16 @@ GENERATIONS close the remaining cross-table skew window:
   runs ENTIRELY against the clone, and commits with ONE atomic
   symlink replace — so every table of the live path flips together;
 * readers pin a generation by resolving the symlink ONCE at open
-  (``resolve_root``): every later open — including lazy side tables
-  (docstore, bigrams) — stays inside that immutable snapshot;
+  (``open_pinned``, the one reader-side ``resolve_root`` call): every
+  later open — including lazy side tables (docstore, bigrams,
+  tombstones, boosts) — stays inside that immutable snapshot, and the
+  same call runs the retry-once open every reader shares;
 * the previous generation is retained through the next commit (an
   open reader's grace period), older ones are garbage-collected.
+
+Small metadata JSONs (``index_meta.json``, ``positions_meta.json``,
+``bigrams_meta.json``) are replaced with ``write_json`` — temp file
+plus ``os.replace`` — so a reader never sees a truncated file.
 
 At cluster scale the same contract is a table-format snapshot pointer
 (Iceberg-style): one manifest swap names every table's files for a
@@ -70,12 +76,45 @@ def is_generationed(index_dir: str) -> bool:
 
 
 def resolve_root(index_dir: str) -> str:
-    """Pin a generation: the real directory behind the index path.
-    Readers call this ONCE at open so every subsequent (possibly
-    lazy) table open lands inside the same immutable snapshot. A
-    plain directory resolves to itself."""
+    """Pin a generation: the real directory behind the index path. A
+    plain directory resolves to itself. Readers pin through
+    open_pinned, which calls this once per open attempt."""
     p = os.path.abspath(index_dir)
     return os.path.realpath(p) if os.path.islink(p) else p
+
+
+def open_pinned(index_dir: str, open_fn):
+    """Open a reader on one generation: resolve the root once and
+    return ``open_fn(root)``; open_fn opens every table, eagerly or
+    lazily, under that root.
+
+    Retry-once: a reader that listed a directory and then opens a
+    listed file after a publish swap sees it missing, and a plain
+    directory opened while the one-time legacy-to-generation
+    conversion committed may have mixed tables from both sides (it is
+    detected by re-resolving after the open). Either way one re-open
+    after 50 ms sees a consistent committed state; a second failure is
+    real and propagates."""
+    import time
+
+    import pyarrow.lib
+
+    for attempt in (0, 1):
+        try:
+            root = resolve_root(index_dir)
+            out = open_fn(root)
+            # an open that pinned a .gN directory needs no recheck:
+            # that directory is immutable and kept through the next
+            # commit
+            if (root == os.path.abspath(index_dir)
+                    and resolve_root(index_dir) != root):
+                raise FileNotFoundError(
+                    f"{index_dir}: generation committed during open")
+            return out
+        except (FileNotFoundError, OSError, pyarrow.lib.ArrowInvalid):
+            if attempt:
+                raise
+            time.sleep(0.05)
 
 
 def _clone_generation(src: str, dst: str) -> None:

@@ -4,8 +4,8 @@ SymSpell-style symmetric-deletion lookup (public algorithm: Garbe's
 SymSpell): at BUILD time every dictionary term emits its 0- and
 1-character-deletion variants into a (variant, term, df) table sorted
 by variant; at SERVING time a query term's own 0/1-deletion variants
-are probed with row-group-pruned pyarrow reads (the same footer-index
-seek pattern as plans/wand.py) and candidates are ranked by true
+are probed with row-group-pruned pyarrow reads (the footer row-group
+index of plans/footer) and candidates are ranked by true
 Damerau-Levenshtein distance, then df desc, then term asc.
 
 Symmetric 1-deletes cover every Damerau-Levenshtein distance-1 edit
@@ -102,30 +102,21 @@ class Suggester:
     """Serving-side suggestion lookups — pyarrow only, no Spark job."""
 
     def __init__(self, index_dir: str):
-        import pyarrow.dataset as ds
-        import pyarrow.parquet as pq
+        from search_engine_spark.plans.publish import open_pinned
 
-        from search_engine_spark.plans.publish import resolve_root
+        open_pinned(index_dir, self._open)
 
-        index_dir = resolve_root(index_dir)  # pin one generation
+    def _open(self, index_dir: str) -> None:
+        from search_engine_spark.plans.footer import footer_index
+
         path = os.path.join(index_dir, SUGGEST_DIR)
         if not os.path.isdir(path):
             raise FileNotFoundError(
                 f"{path} missing — build it with "
                 "`python index_admin.py build-suggest --index-dir ...`"
             )
-        self._files: dict[str, pq.ParquetFile] = {}
-        self._rg: list[tuple[str, int, str, str]] = []
-        for frag in ds.dataset(path, format="parquet").get_fragments():
-            pf = pq.ParquetFile(frag.path)
-            self._files[frag.path] = pf
-            idx = pf.schema_arrow.get_field_index("variant")
-            md = pf.metadata
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                lo = st.min if st is not None else None
-                hi = st.max if st is not None else None
-                self._rg.append((frag.path, rg, lo, hi))
+        self._files, groups = footer_index(path, "variant")
+        self._rg = groups.get(None, [])
 
     def _probe(self, variants: list[str]) -> dict[str, int]:
         """{candidate term: df} for rows whose variant matches."""

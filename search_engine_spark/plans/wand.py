@@ -54,19 +54,19 @@ from __future__ import annotations
 import heapq
 import math
 import os
-import time
 from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 
 from search_engine_spark import B, K1
 from search_engine_spark.functions.codec import decode_postings, decode_varints
 from search_engine_spark.functions.hashing import term_bucket
 from search_engine_spark.plans.deletes import load_tombstones, mask_deleted
+from search_engine_spark.plans.footer import admitted, footer_index
+from search_engine_spark.plans.publish import open_pinned
 from search_engine_spark.plans.scoring import analyze_query
 
 
@@ -187,36 +187,15 @@ class LocalSearcher:
 
     def __init__(self, index_dir: str, *, cache_terms: int = 256,
                  load_boosts: bool = True):
-        # Retry-once open: lifecycle mutations (compact / merge-into /
-        # boost installs) publish each table ATOMICALLY via dir
-        # exchange (plans/publish.py), but a reader that LISTED the old
-        # directory and then opens a listed file after the swap still
-        # 404s (list-then-open race). One re-open sees a consistent
-        # post-swap state; a second failure is real corruption and
-        # propagates. Exercised by
-        # tests/test_deletes.py::test_concurrent_reader_survives_compaction.
-        import pyarrow.lib as _palib
-
-        for _attempt in (0, 1):
-            try:
-                self._open(index_dir, cache_terms=cache_terms,
-                           load_boosts=load_boosts)
-                return
-            except (FileNotFoundError, OSError, _palib.ArrowInvalid):
-                if _attempt:
-                    raise
-                time.sleep(0.05)
+        # one generation, retry-once (plans/publish.open_pinned):
+        # exercised by tests/test_deletes.py::
+        # test_concurrent_reader_survives_compaction and the
+        # concurrent-reader generation test
+        open_pinned(index_dir, lambda root: self._open(
+            root, cache_terms=cache_terms, load_boosts=load_boosts))
 
     def _open(self, index_dir: str, *, cache_terms: int,
               load_boosts: bool) -> None:
-        # pin a generation (plans/publish): on a generation-managed
-        # index every table open below — and every LAZY one later
-        # (docstore, bigrams, suggest) — must land inside ONE
-        # immutable snapshot, so resolve the symlink exactly once
-        from search_engine_spark.plans.publish import resolve_root
-
-        requested = index_dir
-        index_dir = resolve_root(index_dir)
         self.root = index_dir
         st = pq.read_table(os.path.join(index_dir, "stats")).to_pandas()
         self.n_docs = int(st.n_docs.iloc[0])
@@ -254,8 +233,9 @@ class LocalSearcher:
                 _meta = json.load(f)
             self.n_buckets = int(_meta["n_buckets"])
             self._tfnorm_scale = float(_meta.get("tfnorm_scale", 1.0))
-        # dictionary row-group index (mirrors the postings one below)
-        self._dict_rg: dict[int, list[tuple[str, int, str, str]]] = {}
+        # footer row-group indexes (plans/footer) over the dictionary
+        # (prefix/vocab scans) and the postings (every served query)
+        self._dict_rg: dict = {}
         self._dict_files: dict[str, pq.ParquetFile] = {}
         self._eager_df: dict[str, int] = {}
         self._eager_bucket: dict[str, int] = {}
@@ -268,50 +248,17 @@ class LocalSearcher:
             self._eager_bucket = dict(zip(d.term, d.bucket.astype(int)))
             self.n_buckets = 1 + max(self._eager_bucket.values(), default=0)
         else:
-            for frag in ds.dataset(
-                os.path.join(index_dir, "dictionary"), format="parquet",
-                partitioning="hive",
-            ).get_fragments():
-                path = frag.path
-                bucket = int(path.split("bucket=")[1].split("/")[0])
-                pf = pq.ParquetFile(path)
-                self._dict_files[path] = pf
-                term_idx = pf.schema_arrow.get_field_index("term")
-                md = pf.metadata
-                for rg in range(md.num_row_groups):
-                    stats = md.row_group(rg).column(term_idx).statistics
-                    lo = stats.min if stats is not None else None
-                    hi = stats.max if stats is not None else None
-                    self._dict_rg.setdefault(bucket, []).append((path, rg, lo, hi))
+            self._dict_files, self._dict_rg = footer_index(
+                os.path.join(index_dir, "dictionary"), "term")
         self._dict_cache: dict[str, tuple[int, int, int | None] | None] = {}
         self._df = _LazyDF(self)
-        self._dataset = ds.dataset(
-            os.path.join(index_dir, "postings"), format="parquet",
-            partitioning="hive",
-        )
-        # Footer-built row-group index: one pass over parquet metadata
-        # at open time -> per-query reads touch ONLY the row groups
-        # whose term range covers the query term (the on-disk seek
-        # structure; the reference's analogue is its term->offset
-        # dictionary [PK, SURVEY.md 1.2]). Files are written sorted by
-        # (term, doc_id), so ranges are tight.
-        self._rg: dict[int, list[tuple[str, int, str, str]]] = {}
-        self._files: dict[str, pq.ParquetFile] = {}
-        self._cols: dict[str, list[str]] = {}  # per file: columns read
-        for frag in self._dataset.get_fragments():
-            path = frag.path
-            bucket = int(path.split("bucket=")[1].split("/")[0])
-            pf = pq.ParquetFile(path)
-            self._files[path] = pf
-            self._cols[path] = self._COLUMNS + (
-                ["tf_sum"] if "tf_sum" in pf.schema_arrow.names else [])
-            term_idx = pf.schema_arrow.get_field_index("term")
-            md = pf.metadata
-            for rg in range(md.num_row_groups):
-                stats = md.row_group(rg).column(term_idx).statistics
-                lo = stats.min if stats is not None else None
-                hi = stats.max if stats is not None else None
-                self._rg.setdefault(bucket, []).append((path, rg, lo, hi))
+        self._files, self._rg = footer_index(
+            os.path.join(index_dir, "postings"), "term")
+        schemas = [pf.schema_arrow for pf in self._files.values()]
+        self._cols = {path: self._COLUMNS + (["tf_sum"] if "tf_sum" in
+                                             sch.names else [])
+                      for path, sch in zip(self._files, schemas)}
+        self._empty = (schemas[0] if schemas else pa.schema([])).empty_table()
         self._term_cache: dict[str, _Segs] = {}
         # per-term query counts: a term is promoted to the full-list
         # cache (enabling the vectorized warm path) on its SECOND
@@ -357,20 +304,6 @@ class LocalSearcher:
         # (it audits the table itself and must not crash on corruption)
         if load_boosts and os.path.isdir(boosts_dir):
             self.load_static_boosts(boosts_dir)
-        # generation-pin validation for PLAIN-dir opens: the one-time
-        # legacy->generation conversion turns the live dir into a
-        # symlink mid-open, so a reader that resolved a plain path and
-        # then raced the commit has silently mixed tables (e.g. old
-        # postings with the new generation's dropped tombstone table —
-        # caught by the concurrent-reader generation test). Detect and
-        # retry (the __init__ retry loop re-opens post-commit). An
-        # open that pinned a .gN directory needs no recheck: that
-        # directory is immutable and retained through the next commit.
-        if self.root == os.path.abspath(requested) and \
-                resolve_root(requested) != self.root:
-            raise FileNotFoundError(
-                f"{requested}: generation committed during open"
-            )
 
     def load_static_boosts(self, source) -> None:
         """Attach a static document prior: (doc_id, boost) rows from a
@@ -628,23 +561,12 @@ class LocalSearcher:
         upper bounds for live docs."""
         if self._lmd_dl_range is not None:
             return self._lmd_dl_range
-        docs_dir = os.path.join(self.root, "docs")
-        lo, hi = None, None
-        for f in sorted(os.listdir(docs_dir)):
-            if not f.endswith(".parquet") or f.startswith(("_", ".")):
-                continue
-            pf = pq.ParquetFile(os.path.join(docs_dir, f))
-            idx = pf.schema_arrow.get_field_index("doclen")
-            md = pf.metadata
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                if st is None or st.min is None or st.max is None:
-                    raise _LmdNoBounds()
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-        if lo is None:
+        _, groups = footer_index(os.path.join(self.root, "docs"), "doclen")
+        rgs = groups.get(None, [])
+        if not rgs or any(g[2] is None or g[3] is None for g in rgs):
             raise _LmdNoBounds()
-        self._lmd_dl_range = (int(lo), int(hi))
+        self._lmd_dl_range = (int(min(g[2] for g in rgs)),
+                              int(max(g[3] for g in rgs)))
         return self._lmd_dl_range
 
     def _lmd_seg_bounds(self, max_tfnorm: np.ndarray, p_t: float,
@@ -854,6 +776,9 @@ class LocalSearcher:
             if t in self._df
         )
         qterms = [t for _, t in scored[:n_terms]]
+        # the df-only prefetch above cached their stats, so search's
+        # own prefetch skips them: read their segments in one batch
+        self._read_terms([t for t in qterms if t not in self._term_cache])
         hits = self.search(qterms, k=k + 1, mode="or", stem=stem)
         return [(d, s) for d, s in hits if d != int(doc_id)][:k]
 
@@ -942,8 +867,7 @@ class LocalSearcher:
             if any(p.num_columns != parts[0].num_columns for p in parts):
                 parts = [p.drop_columns(["tf_sum"])
                          if "tf_sum" in p.column_names else p for p in parts]
-            tbl = (pa.concat_tables(parts) if parts
-                   else self._dataset.schema.empty_table())
+            tbl = pa.concat_tables(parts) if parts else self._empty
             if not self._eager:
                 self._note_stats(t, tbl)
             if stats_only:
@@ -976,8 +900,7 @@ class LocalSearcher:
                   ) -> list[tuple[str, int]]:
         """(file, row group) pairs of `bucket` whose term range admits
         `term`, in file and row-group order."""
-        return [(path, rg) for path, rg, lo, hi in self._rg.get(bucket, ())
-                if (lo is None or lo <= term) and (hi is None or term <= hi)]
+        return [(path, rg) for path, rg, _, _ in admitted(self._rg, term, bucket)]
 
     def _tfnorm(self, tf: np.ndarray, dl: np.ndarray) -> np.ndarray:
         tff = tf.astype(np.float64)

@@ -176,6 +176,28 @@ def test_reader_clear_static_boosts(reader, spark, index_dir):
     assert [r.score for r in boosted] != [r.score for r in pure]
 
 
+def test_reader_keeps_its_generation_side_tables(spark, index_dir,
+                                                 tmp_path_factory):
+    """IndexReader pins one generation at open for every table it
+    reads later, boosts included: a commit that drops boosts/ leaves
+    an already-open reader's results unchanged."""
+    import shutil
+
+    from search_engine_spark.plans.publish import begin_generation
+
+    d = str(tmp_path_factory.mktemp("pinned") / "index")
+    shutil.copytree(index_dir, d)
+    begin_generation(d).commit()  # legacy dir -> generation symlink
+    r = IndexReader(spark, d)
+    want = r.search("spark join", k=10, stem=False).collect()
+    assert want
+    txn = begin_generation(d)
+    shutil.rmtree(os.path.join(txn.work, "boosts"))
+    txn.commit()
+    assert not os.path.isdir(os.path.join(d, "boosts"))
+    assert r.search("spark join", k=10, stem=False).collect() == want
+
+
 # ---------------------------------------------------------------------------
 # minimum-should-match
 # ---------------------------------------------------------------------------

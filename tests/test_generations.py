@@ -3,7 +3,7 @@ mutations (compact, merge-into) commit with ONE atomic symlink swap,
 so a concurrent reader sees either the entire old index or the entire
 new one — never a mixed set of tables (the round-4 verdict's
 cross-table skew window). Readers pin a generation at open
-(resolve_root) and the previous generation is retained through the
+(open_pinned) and the previous generation is retained through the
 next commit as their grace period."""
 
 import json
@@ -17,6 +17,7 @@ from search_engine_spark.plans.deletes import compact_index, delete_docs
 from search_engine_spark.plans.publish import (
     begin_generation,
     is_generationed,
+    open_pinned,
     resolve_root,
     write_json,
 )
@@ -29,6 +30,25 @@ def idx(spark, documents, tmp_path):
     build_index(spark, documents, d, n_buckets=4, segment_size=64,
                 stem=False, salt_threshold=50, max_salts=4)
     return d
+
+
+def test_open_pinned_retries_a_conversion_raced_open(tmp_path):
+    """A plain-directory open that races the legacy-to-generation
+    conversion is detected after open_fn returns and retried once, on
+    the generation the conversion committed."""
+    d = str(tmp_path / "plain")
+    os.makedirs(d)
+    roots = []
+
+    def open_fn(root):
+        if not roots:  # the conversion commits mid-open
+            os.rename(d, d + ".g0")
+            os.symlink("plain.g0", d)
+        roots.append(root)
+        return root
+
+    assert open_pinned(d, open_fn).endswith(".g0")
+    assert roots == [d, d + ".g0"]  # one retry
 
 
 def test_convert_and_compact_generationed(spark, idx):

@@ -89,13 +89,16 @@ def test_mlt_requires_docstore(spark, documents, tmp_path):
 def test_mlt_reads_blobs_of_scored_terms_only(index_dir, documents_pdf):
     """Every source-doc term is df-checked from the postings' n/tf_sum
     columns alone; only the n_terms scored terms' segments are read
-    with their blobs and enter the term cache."""
+    with their blobs, in one batch — each admitted row group once —
+    and enter the term cache."""
+    from search_engine_spark.functions.hashing import term_bucket
+
     s = LocalSearcher(index_dir)
     blob_reads = []
     for path, pf in list(s._files.items()):
-        def read(rgs, columns=None, _pf=pf, **kw):
+        def read(rgs, columns=None, _pf=pf, _path=path, **kw):
             if "doc_ids" in columns:
-                blob_reads.append(rgs)
+                blob_reads.extend((_path, rg) for rg in rgs)
             return _pf.read_row_groups(rgs, columns=columns, **kw)
         s._files[path] = type("_Counted", (), {
             "read_row_groups": staticmethod(read)})()
@@ -105,4 +108,7 @@ def test_mlt_reads_blobs_of_scored_terms_only(index_dir, documents_pdf):
     assert s.more_like_this(int(row.doc_id), k=10, n_terms=5, stem=False)
     assert terms <= set(s._dict_cache)
     assert 0 < len(s._term_cache) <= 5 and set(s._term_cache) <= terms
-    assert 0 < len(blob_reads) <= 5
+    scored_rgs = {rg for t in s._term_cache
+                  for rg in s._admitted(t, term_bucket(t, s.n_buckets))}
+    assert len(blob_reads) == len(scored_rgs)
+    assert set(blob_reads) == scored_rgs

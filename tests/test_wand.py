@@ -278,7 +278,9 @@ def _copy_index(index_dir, tmp_path_factory, name):  # noqa: F811
 
 
 def _rewrite(d, table, fn):
-    """Rewrite every parquet file of one index table in place."""
+    """Rewrite every parquet file of one index table in place, and drop
+    each file's Hadoop .crc sidecar, which the rewrite leaves stale (a
+    Spark read of the copy would fail its checksum)."""
     import glob
     import os
 
@@ -288,6 +290,10 @@ def _rewrite(d, table, fn):
     assert files
     for f in files:
         fn(pq.ParquetFile(f).read(), f)
+        head, base = os.path.split(f)
+        crc = os.path.join(head, f".{base}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
 
 
 def test_lmd_without_dictionary_cf(index_dir, tmp_path_factory):  # noqa: F811
@@ -505,13 +511,15 @@ def test_first_contact_reads_each_row_group_once(index_dir):  # noqa: F811
         assert len(reads) == 1, reads
 
 
-def test_fsck_checks_dictionary_cf(index_dir, tmp_path_factory):  # noqa: F811
+def test_fsck_checks_dictionary_cf(spark, index_dir,  # noqa: F811
+                                   tmp_path_factory):
     """fsck I1 covers cf: a dictionary cf one above the postings' tf
-    sum is reported, naming the term."""
+    sum is reported, naming the term — by the sampled local fsck and
+    by the full-coverage fsck_distributed."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from search_engine_spark.plans.fsck import fsck
+    from search_engine_spark.plans.fsck import fsck, fsck_distributed
 
     d = _copy_index(index_dir, tmp_path_factory, "cfdrift")
     victim = []
@@ -531,3 +539,39 @@ def test_fsck_checks_dictionary_cf(index_dir, tmp_path_factory):  # noqa: F811
     cf_errors = [e for e in out["errors"] if e.startswith("I1 cf")]
     assert len(cf_errors) == 1 and repr(victim[0]) in cf_errors[0], \
         out["errors"][:5]
+    dist = fsck_distributed(spark, d)
+    assert not dist["ok"]
+    assert dist["errors"] == [
+        e for e in dist["errors"] if repr(victim[0]) in e
+        and e.startswith("I1 cf") and "dictionary cf" in e], dist["errors"]
+    assert len(dist["errors"]) == 1
+
+
+def test_fsck_checks_segments_tf_sum(spark, index_dir,  # noqa: F811
+                                     tmp_path_factory):
+    """Serving takes cf from the segments' tf_sum: one segment's
+    tf_sum one too high is reported by both fscks, naming the term."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from search_engine_spark.plans.fsck import fsck, fsck_distributed
+
+    d = _copy_index(index_dir, tmp_path_factory, "tfsumdrift")
+    victim = []
+
+    def bump(t, f):
+        if not victim:
+            ts = t["tf_sum"].to_pylist()
+            ts[0] += 1
+            victim.append(t["term"][0].as_py())
+            t = t.set_column(t.schema.get_field_index("tf_sum"), "tf_sum",
+                             pa.array(ts, type=t["tf_sum"].type))
+        pq.write_table(t, f)
+
+    _rewrite(d, "postings", bump)
+    for out in (fsck(d, sample_terms=10**6), fsck_distributed(spark, d)):
+        assert not out["ok"]
+        assert len(out["errors"]) == 1, out["errors"][:5]
+        assert out["errors"][0].startswith("I1 cf")
+        assert repr(victim[0]) in out["errors"][0] and "tf_sum" in \
+            out["errors"][0]
